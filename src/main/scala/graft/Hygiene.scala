@@ -51,31 +51,24 @@ object Hygiene {
     try f finally sc.setJobDescription(old)
   }
 
-  /** Conf: "off" disables [[scopedShuffleParts]] (the stage runs at the
-    * session's partition count) — the same-session A/B seam, one flag
-    * for every caller (the CC loop keeps its own seam; see
-    * `ConnectedComponents.AdaptivePartsConf`). */
-  val ScopedPartsConf = "spark.graft.scopedParts"
-
   /** Execute `body` with `spark.sql.shuffle.partitions` scoped to
     * clamp(ceil(rows / 500), 1, session value) — for stages whose
     * reduce sides are PROVABLY bounded by `rows` (guide §2.2
-    * fewer-larger-partitions, data-derived like the CC loop's adaptive
-    * count: at real scale the derived value saturates at the session's,
-    * so only the small-data regime coalesces; never a core-count
-    * constant). The conf is restored in the finally. Caveat the caller
-    * owns: the conf is session-global, so a concurrent job whose ACTION
-    * lands inside the window also plans at the scoped count — only
-    * stages whose concurrent neighbors are themselves small may use
-    * this (results are partition-count-independent either way; this is
-    * a latency lever, not a semantic one). */
+    * fewer-larger-partitions, data-derived: at real scale the derived
+    * value saturates at the session's, so only the small-data regime
+    * coalesces; never a core-count constant). Used by the fold's mix
+    * stage, its output tail and the connected-components loop (rows =
+    * its node count). The conf is restored in the finally. Caveat the
+    * caller owns: the conf is session-global, so a concurrent job whose
+    * ACTION lands inside the window also plans at the scoped count —
+    * only stages whose concurrent neighbors are themselves small may
+    * use this (results are partition-count-independent either way;
+    * this is a latency lever, not a semantic one). */
   def scopedShuffleParts[T](s: SparkSession, rows: Long)(body: => T): T = {
     val conf = s.sessionState.conf.numShufflePartitions
     val derived = math.max(1L, math.min(conf.toLong,
       (math.max(rows, 0L) + 499L) / 500L)).toInt
-    val engage = derived < conf &&
-      !s.conf.getOption(ScopedPartsConf).contains("off")
-    if (!engage) body
+    if (derived >= conf) body
     else {
       s.conf.set("spark.sql.shuffle.partitions", derived)
       try body

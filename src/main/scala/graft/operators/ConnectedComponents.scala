@@ -140,23 +140,13 @@ object ConnectedComponents {
     // rows per task, pure per-task scheduling latency (the
     // shuffle.partitions=8 A/B measured q57 3.70 → 3.07 s). The count
     // is derived from the KNOWN checkpointed node count and scoped to
-    // the loop (restored in the finally): at corpus scale it saturates
-    // at the configured value, so this only ever coalesces the
-    // small-graph regime — guide §2.2's fewer-larger-partitions, made
-    // data-adaptive instead of a core-count constant. Dense graphs
-    // with few nodes but many edges stay safe: map sides run at the
-    // PARENT partitioning and the per-round contract collapses
-    // near-clique components geometrically (the r16 measurement: 4.5M
-    // symmetric edges → 2582 after round 1). Conf seam
-    // `spark.graft.cc.adaptiveParts=off` for same-session A/Bs.
-    val confParts = s.sessionState.conf.numShufflePartitions
-    val derivedParts = math.max(1L, math.min(confParts.toLong,
-      (nNodes + LoopNodesPerPartition - 1) / LoopNodesPerPartition)).toInt
-    val adaptParts =
-      !s.conf.getOption(AdaptivePartsConf).contains("off") &&
-        derivedParts < confParts
-    if (adaptParts)
-      s.conf.set("spark.sql.shuffle.partitions", derivedParts)
+    // the loop by [[graft.Hygiene.scopedShuffleParts]]: at corpus scale
+    // it saturates at the configured value, so this only ever coalesces
+    // the small-graph regime. Dense graphs with few nodes but many
+    // edges stay safe: map sides run at the PARENT partitioning and the
+    // per-round contract collapses near-clique components geometrically
+    // (the r16 measurement: 4.5M symmetric edges → 2582 after round 1).
+    graft.Hygiene.scopedShuffleParts(s, nNodes) {
     // pre-partition on the join key only when the label side will
     // shuffle (above the cap); in the broadcast regime every per-round
     // join is map-side and the repartition would be a pure extra
@@ -287,23 +277,9 @@ object ConnectedComponents {
       // labels are localCheckpointed, so releasing the edge persist is
       // safe on BOTH paths — the finally keeps the non-convergence throw
       // from leaking the symmetrized edge relation in a long-lived session
-    } finally {
-      if (adaptParts)
-        s.conf.set("spark.sql.shuffle.partitions", confParts)
-      edges.unpersist()
-    }
+    } finally edges.unpersist()
+    } // scoped parts
   }
-
-  /** Reduce-side rows per partition the loop aims for when coalescing
-    * its node-sized shuffles (see the adaptive-partition note in
-    * [[labels]]): label rows are two ids (~16–48 B), so 100k rows is a
-    * few MB per task — large enough to amortize task launch, small
-    * enough that a single partition never concentrates real work. */
-  private val LoopNodesPerPartition = 500L
-
-  /** Conf: "off" keeps the loop's shuffles at the session's partition
-    * count (r17 session 2) — the same-session A/B seam. */
-  private[graft] val AdaptivePartsConf = "spark.graft.cc.adaptiveParts"
 
   /** Driver-side id ordering, shared by the tiny-graph fast path,
     * [[driverFinish]] and the leakage-safe split's driver path

@@ -2,10 +2,12 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.Multimodal
-import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, HammingStoreMeta, NearDupSignatureStore}
+import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, NearDupSignatureStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /** The INCREMENTAL corpus pipeline (VERDICT r10 task 1) — the shape a
   * 100 TB training-data pipeline actually runs daily: yesterday's
@@ -119,13 +121,14 @@ import org.apache.spark.sql.functions._
 object CorpusPipelineDelta {
   import CorpusPipeline.Config
 
-  /** Shared daemon pool for a fold's overlappable side jobs (guide
-    * §2.6 — overlap independent jobs): the digest-ledger append, the
-    * media half, the store append and the meta staging have no
-    * downstream readers inside the fold, so they run here while the
-    * main thread walks the dependent chain. Cached (grows on demand,
-    * reclaims idle threads); daemon so a dying driver never hangs on
-    * it. Every launched job is AWAITED before the fold's commit point. */
+  /** Shared daemon pool for a fold's overlapped jobs (guide §2.6 —
+    * overlap independent jobs). Cached (grows on demand, reclaims idle
+    * threads, so a pool job may itself launch and await pool jobs);
+    * daemon so a dying driver never hangs on it. Jobs reach it only
+    * through a [[poolScope]], whose rule is: every job launched in the
+    * scope is joined when the scope exits — before the fold's
+    * pre-commit crash point on success, and before the throw leaves
+    * the fold lease on failure. */
   private lazy val foldPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(
       new java.util.concurrent.ThreadFactory {
@@ -138,6 +141,59 @@ object CorpusPipelineDelta {
       })
   private lazy val foldEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(foldPool)
+
+  /** The jobs one [[poolScope]] launched on [[foldPool]], each under its
+    * Spark job label. */
+  private final class PoolJobs(s: SparkSession) {
+    private val launched =
+      new java.util.concurrent.ConcurrentLinkedQueue[Future[_]]
+
+    def apply[T](label: String)(body: => T): Future[T] = {
+      val f = Future(graft.Hygiene.labeled(s, label)(body))(foldEc)
+      launched.add(f)
+      f
+    }
+
+    /** Start a store's overlapped probe+append with a labeled pool
+      * executor; the append's future joins the scope, the probe's
+      * result is returned. */
+    def overlapped[T](label: String)(
+        start: java.util.concurrent.Executor => (T, Future[Unit])): T = {
+      val (out, done) = start(r => foldPool.execute(() =>
+        graft.Hygiene.labeled(s, label)(r.run())))
+      launched.add(done)
+      out
+    }
+
+    /** Await every launched job, including any launched while waiting,
+      * then rethrow the first failure in launch order. */
+    def join(): Unit = {
+      var failure = Option.empty[Throwable]
+      var f = launched.poll()
+      while (f != null) {
+        Await.ready(f, Duration.Inf).value.get.failed
+          .foreach(t => failure = failure.orElse(Some(t)))
+        f = launched.poll()
+      }
+      failure.foreach(t => throw t)
+    }
+  }
+
+  /** Run `body` with a job scope and join every job it launched on the
+    * way out. On failure the join's own errors are secondary to the
+    * primary one: recovery must see a stable, not still-mutating,
+    * partial state, and no Spark job may outlive the fold. */
+  private def poolScope[T](s: SparkSession)(body: PoolJobs => T): T = {
+    val jobs = new PoolJobs(s)
+    val out =
+      try body(jobs)
+      catch { case t: Throwable =>
+        try jobs.join() catch { case _: Throwable => () }
+        throw t
+      }
+    jobs.join()
+    out
+  }
 
   private def storeDir(stateDir: String) = s"$stateDir/store"
   private def digestsDir(stateDir: String) = s"$stateDir/digests"
@@ -337,12 +393,18 @@ object CorpusPipelineDelta {
     graft.operators.MaintenanceLease.withLease(s, stateDir, "fold") {
 
     val jPath = new Path(journalPath(stateDir))
+    val mPath = mixDir(stateDir)
     if (fs.exists(jPath))
       throw new IllegalStateException(
         s"a crashed fold left its journal at $jPath — run " +
           "CorpusPipelineDelta.recoverFold(stateDir) first (RolledBack " +
           "=> re-apply that increment; Completed => it was already " +
           "applied)")
+
+    // every pool job from the head reads to the mix stage runs in this
+    // scope: it is joined before the pre-commit crash point below, and
+    // on any throw before the throw leaves the fold lease
+    poolScope(s) { jobs =>
 
     // 0a. config-stability precondition (r12 sweep): the state's
     // fingerprint must match this fold's — a mid-chain change to a
@@ -357,30 +419,20 @@ object CorpusPipelineDelta {
     // — run on the pool beside the main thread's delta id-bounds
     // aggregate. All are read-only; the fold lease (already held) is
     // the exclusion that makes the early store-meta read stable.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val metaF = Future(graft.Hygiene.labeled(s, "fold: meta read") {
-      readMetaState(s, stateDir) })(foldEc)
-    val mediaBoundsF = Future(
-      graft.Hygiene.labeled(s, "fold: media id bounds") {
-        media.map(_.toDF().agg(
-          min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-          .collect().head) })(foldEc)
+    val metaF = jobs("fold: meta read") { readMetaState(s, stateDir) }
+    val mediaBoundsF = jobs("fold: media id bounds") {
+      media.map(_.toDF().agg(
+        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+        .collect().head) }
     val stPath = storeDir(stateDir)
-    val storeMetaF = Future(graft.Hygiene.labeled(s, "fold: store meta") {
-      NearDupSignatureStore.preloadMeta(s, stPath) })(foldEc)
+    val storeMetaF = jobs("fold: store meta") {
+      NearDupSignatureStore.preloadMeta(s, stPath) }
     // the external benchmark's gram table is fixed per fold and
     // read-only — materialize it on the pool too, so the mix-stage
     // write (whose plan broadcasts it) reads checkpointed blocks
     // instead of deriving grams on the fold's critical path.
-    // Conf-gated off for same-session A/B measurement (the
-    // SkipEagerCutConf precedent; this box's session-level bimodality
-    // makes cross-session medians unusable for ~0.5 s claims).
-    val evalGramsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (s.conf.getOption(EvalGramPrefetchConf).contains("off")) None
-      else Some(Future(graft.Hygiene.labeled(s, "fold: eval grams") {
-        graft.Hygiene.eagerCut(
-          CorpusPipeline.evalGramsOf(evalDocs, cfg)) })(foldEc))
+    val evalGramsF = jobs("fold: eval grams") {
+      graft.Hygiene.eagerCut(CorpusPipeline.evalGramsOf(evalDocs, cfg)) }
     // steps 1–2's PLAN construction, hoisted above the head futures (no
     // job runs here — lazy frames): the ledger hit probe derives its
     // broadcast side from `withDigest`, and prefetching it needs the
@@ -398,62 +450,39 @@ object CorpusPipelineDelta {
     // reads only the PRE-append ledger and the delta — both stable
     // under the held fold lease, and this fold's digest append launches
     // strictly after `exactNew` is cut from the probe's result, so the
-    // early materialization can never see (or race) the append. Ran
-    // unlabeled on the critical path between the head reads and the
-    // gate cut (~0.4 s, 4 jobs in the ProfJobs trace); now rides the
-    // pool beside the precondition aggregates. Conf seam for
-    // same-session A/Bs (the eval-gram precedent).
-    def hitProbe(): DataFrame =
-      s.read.parquet(Compaction.resolveLive(fs, dPath))
-        .join(broadcast(withDigest.select(col("__digest")).distinct()),
-          "__digest")
-        .select(col("__digest")).distinct()
-        .localCheckpoint(eager = true)
-    val hitsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (s.conf.getOption(HitsPrefetchConf).contains("off") ||
-          !Compaction.liveExists(fs, dPath)) None
-      else Some(Future(graft.Hygiene.labeled(s, "fold: ledger hit probe") {
-        hitProbe() })(foldEc))
+    // early materialization can never see (or race) the append. Rides
+    // the pool beside the precondition aggregates; None before the
+    // ledger exists (genesis).
+    val hitsF =
+      if (!Compaction.liveExists(fs, dPath)) None
+      else Some(jobs("fold: ledger hit probe") {
+        s.read.parquet(Compaction.resolveLive(fs, dPath))
+          .join(broadcast(withDigest.select(col("__digest")).distinct()),
+            "__digest")
+          .select(col("__digest")).distinct()
+          .localCheckpoint(eager = true) })
     // media head prefetches (r17 session 2, the r16 "Not yet
     // optimized" #1 rung): the fingerprint cut and the Hamming-store
     // meta depend only on the media frame / the pre-mutation store —
     // read-only under the fold lease — so they run beside the head
     // jobs instead of serializing at the front of the media side job.
-    val mediaOverlapOn =
-      !s.conf.getOption(MediaOverlapConf).contains("off")
-    val mediaFpsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (!mediaOverlapOn) None
-      else media.map(m => Future(
-        graft.Hygiene.labeled(s, "fold: media fingerprints") {
-          graft.Hygiene.eagerCut(Multimodal.imageFingerprints(m).toDF())
-        })(foldEc))
-    val mediaMetaF: Option[scala.concurrent.Future[Option[HammingStoreMeta]]] =
-      if (!mediaOverlapOn) None
-      else media.map(_ => Future(
-        graft.Hygiene.labeled(s, "fold: media store meta") {
-          HammingStore.preloadMeta(s, mediaStoreDir(stateDir)) })(foldEc))
+    val mediaHead = media.map(m => (m,
+      jobs("fold: media fingerprints") {
+        graft.Hygiene.eagerCut(Multimodal.imageFingerprints(m).toDF()) },
+      jobs("fold: media store meta") {
+        HammingStore.preloadMeta(s, mediaStoreDir(stateDir)) }))
     // gate + within-delta dedup cut launched at the head too (r17
     // session 2, second rung): `within` depends only on the delta —
     // never on the ledger — so its materialization overlaps the bounds
     // aggregate, the head reads and the hit probe. The cross-increment
     // anti-join against the (checkpointed) hit set then stays LAZY at
-    // the exactNew seam below: each consumer evaluates a block-cached
-    // broadcast anti-join over the two checkpoints, the same cost
-    // class the probe-fold retention trade rides (r17 session 1),
-    // instead of the fold paying one more serial materializing job.
-    // Read-only (the checkpoint lands in Spark block storage); a
-    // precondition throw below abandons it harmlessly, the eval-gram
-    // precedent. Conf seam for same-session A/Bs.
+    // `exactNew` below. Read-only (the checkpoint lands in Spark
+    // block storage).
     val keep = withDigest.groupBy(col("__digest"))
       .agg(min(col(cfg.idCol)).as(cfg.idCol))
     val within = withDigest.join(keep, Seq("__digest", cfg.idCol))
-    val cutPrefetchOn =
-      !s.conf.getOption(CutPrefetchConf).contains("off")
-    val withinCutF: Option[scala.concurrent.Future[DataFrame]] =
-      if (!cutPrefetchOn) None
-      else Some(Future(
-        graft.Hygiene.labeled(s, "fold: gate+exact-dedup cut") {
-          graft.Hygiene.eagerCut(within) })(foldEc))
+    val withinCutF = jobs("fold: gate+exact-dedup cut") {
+      graft.Hygiene.eagerCut(within) }
     val fp = cfgFingerprint(cfg)
     // migration (r13 review finding): fingerprints persisted before the
     // keepLangs sort rendered the build-time Seq order verbatim — the
@@ -521,13 +550,13 @@ object CorpusPipelineDelta {
     // nothing durable (its checkpoint lands in Spark block storage), so
     // the journal's driver-side tree walk runs on the pool beside that
     // job. It is awaited — failure propagated — before the fold's first
-    // state mutation (the digest-append launch); the catch path joins
-    // it too, so recovery never races a half-written snapshot.
+    // state mutation (the digest-append launch); the scope joins it on
+    // the failure path, so recovery never races a half-written snapshot.
     val token = batchTag.map(b => s"batch_$b").getOrElse(
       if (bounds.isNullAt(0)) "empty-increment"
       else s"ids_${bounds.getLong(0)}_${bounds.getLong(1)}")
-    val journalF = Future(graft.Hygiene.labeled(s, "fold: journal write") {
-      writeJournal(s, stateDir, token) })(foldEc)
+    val journalF = jobs("fold: journal write") {
+      writeJournal(s, stateDir, token) }
 
     // 2. exact dedup: within-delta min-id per digest (the q35 rule),
     // then cross-increment anti-join against the digest ledger. The
@@ -541,40 +570,16 @@ object CorpusPipelineDelta {
     // just to reach the same digest set.
     // (keep/within are plan-built at the head — see withinCutF there.)
     // Consumed by four stages (store ops, retention, decon, digest
-    // append). On-seam: `within` was CUT from the head and the ledger
-    // anti-join stays LAZY over the two checkpoints — each consumer
-    // evaluates a block-cached broadcast anti-join (the probe-fold
-    // retention cost class) instead of the fold paying one more serial
-    // materializing job. The hit set is materialized unconditionally
-    // either way (NOT via the audit-switchable eagerCut): step 7
-    // APPENDS to the ledger that scan reads, and no consumer's plan
-    // may still reference the path. Off-seam: the old single fused
-    // materialization.
-    val exactNew =
-      try graft.Hygiene.labeled(s, "fold: gate+exact-dedup cut") {
-        def hits0() = hitsF.map(f => Await.result(f, Duration.Inf))
-          .getOrElse(graft.Hygiene.labeled(s, "fold: ledger hit probe") {
-            hitProbe() })
-        withinCutF match {
-          case Some(f) =>
-            val withinCut = Await.result(f, Duration.Inf)
-            if (!Compaction.liveExists(fs, dPath)) withinCut
-            else withinCut.join(broadcast(hits0()),
-              Seq("__digest"), "left_anti")
-          case None =>
-            graft.Hygiene.eagerCut(
-              if (!Compaction.liveExists(fs, dPath)) within
-              else within.join(broadcast(hits0()),
-                Seq("__digest"), "left_anti"))
-        }
-      } catch { case t: Throwable =>
-        // a failed cut must still join the in-flight journal write
-        // before propagating — the caller may recover immediately, and
-        // recovery must never race a still-writing snapshot
-        try Await.result(journalF, Duration.Inf)
-        catch { case _: Throwable => () }
-        throw t
-      }
+    // append). `within` was CUT from the head and the ledger anti-join
+    // stays LAZY over the two checkpoints — each consumer evaluates a
+    // block-cached broadcast anti-join (the probe-fold retention cost
+    // class) instead of the fold paying one more serial materializing
+    // job. The hit set is materialized unconditionally (NOT via the
+    // audit-switchable eagerCut): step 7 APPENDS to the ledger that
+    // scan reads, and no consumer's plan may still reference the path.
+    val withinCut = Await.result(withinCutF, Duration.Inf)
+    val exactNew = hitsF.fold(withinCut)(f => withinCut.join(
+      broadcast(Await.result(f, Duration.Inf)), Seq("__digest"), "left_anti"))
     // every mutation below requires the journal durable first
     Await.result(journalF, Duration.Inf)
 
@@ -583,33 +588,18 @@ object CorpusPipelineDelta {
     // appends/stagings, so the side jobs nothing downstream reads —
     // the digest-ledger append, the media half, the store append, the
     // meta staging — run on [[foldPool]] while the main thread walks
-    // the dependent chain (store probe → retention → decon → mix).
-    // Every side job is awaited BEFORE the pre-commit crash seam, so
-    // the commit point sees exactly the same durable state as the
-    // sequential form; a failure anywhere (including an injected crash
-    // seam riding a side job) first joins every in-flight side job —
-    // recovery then rolls back a stable, not still-mutating, state.
-    val pending = scala.collection.mutable.ListBuffer
-      .empty[(String, scala.concurrent.Future[Unit])]
-    def bg(label: String)(body: => Unit): Unit =
-      pending += label -> scala.concurrent.Future(
-        graft.Hygiene.labeled(s, label)(body))(foldEc)
-    def awaitPending(): Unit = {
-      val results = pending.toList.map { case (_, f) =>
-        scala.concurrent.Await.ready(f,
-          scala.concurrent.duration.Duration.Inf).value.get
-      }
-      pending.clear()
-      results.collectFirst { case scala.util.Failure(t) => throw t }
-        .foreach(_ => ())
-    }
-    try {
+    // the dependent chain (store probe → retention → decon → mix). The
+    // scope joins them before the pre-commit crash seam, so the commit
+    // point sees every append durable; a failure anywhere (including
+    // an injected crash seam riding a side job) first joins every
+    // in-flight side job — recovery then rolls back a stable, not
+    // still-mutating, state.
 
     // 6→(overlapped): digest-ledger append (delta-sized) — BEFORE the
     // commit point like every state append; nothing in this fold reads
     // the ledger after `exactNew` was cut, so it rides the pool from
     // the moment the journal exists
-    bg("fold: digest append") {
+    jobs("fold: digest append") {
       exactNew.select(col("__digest")).distinct()
         .write.mode("append").parquet(Compaction.resolveLive(fs, dPath))
     }
@@ -618,7 +608,7 @@ object CorpusPipelineDelta {
     // (optimization r17): it depends only on the durable journal and
     // the media frame, never on the text chain, and it is the longest
     // side chain — starting it before the text store work means the
-    // pre-commit await no longer tails on it.
+    // pre-commit join no longer tails on it.
     // (round 16 — the last uncomposed capstone): dedup
     // the increment's attached images through the persisted
     // [[HammingStore]], under THIS fold's journal — the E18 per-batch
@@ -634,13 +624,12 @@ object CorpusPipelineDelta {
     // append the pair log → ledger EVERY media id (fp NULL for
     // fingerprint-less rows: they are retained by definition, and the
     // ledger is what [[retainedMediaIds]] replays retention over).
-    media.foreach { m => bg("fold: media dedup") {
+    mediaHead.foreach { case (m, mediaFpsF, mediaMetaF) =>
+      jobs("fold: media dedup") {
       val msd = mediaStoreDir(stateDir)
       // fingerprints prefetched beside the fold's head jobs (r17
-      // session 2); off-seam they cut here, the old sequential shape
-      val fps = mediaFpsF.map(f => Await.result(f, Duration.Inf))
-        .getOrElse(graft.Hygiene.eagerCut(
-          Multimodal.imageFingerprints(m).toDF()))
+      // session 2)
+      val fps = Await.result(mediaFpsF, Duration.Inf)
       // The chain's INTERNAL independent halves overlap on the fold
       // pool (r17 session 2 — the r16 "Not yet optimized" #1 rung):
       // the media-id ledger append depends only on `fps` and the
@@ -648,90 +637,48 @@ object CorpusPipelineDelta {
       // the pair-log write needs only the materialized pairs. All are
       // journal-covered appends with no ordering contract between them
       // (recovery rolls every one back from the file snapshot), and
-      // every inner job is awaited before this side job returns — on
-      // the failure path too — so the fold's commit point and crash
-      // seams see exactly the sequential form's durable state.
-      val inner = scala.collection.mutable.ListBuffer
-        .empty[scala.concurrent.Future[Unit]]
-      def innerBg(label: String)(body: => Unit): Unit =
-        inner += scala.concurrent.Future(
-          graft.Hygiene.labeled(s, label)(body))(foldEc)
-      def awaitInner(): Unit = {
-        val rs = inner.toList.map(f =>
-          Await.ready(f, Duration.Inf).value.get)
-        inner.clear()
-        rs.collectFirst { case scala.util.Failure(t) => throw t }
-          .foreach(_ => ())
-      }
-      try {
-        def ledgerWrite(): Unit =
-          m.toDF().select(col("doc_id"))
-            .join(fps, Seq("doc_id"), "left")
-            .write.mode("append")
-            .parquet(Compaction.resolveLive(fs, mediaSeenDir(stateDir)))
+      // this inner scope joins them before the side job returns — on
+      // the failure path too — so the post-media crash seam sees the
+      // whole media half durable.
+      poolScope(s) { inner =>
         // emptiness decided from the step-0c bounds row (null min ⟺
         // zero rows) — an isEmpty here would re-run the ledger join as
         // its own job at the fold's job-count floor
-        val ledgerNeeded = mediaBounds.exists(!_.isNullAt(0))
-        if (mediaOverlapOn && ledgerNeeded)
-          innerBg("fold: media ledger")(ledgerWrite())
-        val mediaMeta0 = mediaMetaF.map(f => Await.result(f, Duration.Inf))
-        val mediaGenesis = mediaMeta0 match {
-          case Some(meta) => meta.isEmpty
-          case None => !HammingStore.exists(s, msd)
-        }
+        if (mediaBounds.exists(!_.isNullAt(0)))
+          inner("fold: media ledger") {
+            m.toDF().select(col("doc_id"))
+              .join(fps, Seq("doc_id"), "left")
+              .write.mode("append")
+              .parquet(Compaction.resolveLive(fs, mediaSeenDir(stateDir)))
+          }
+        val mediaMeta0 = Await.result(mediaMetaF, Duration.Inf)
         val mPairs =
-          if (mediaGenesis) {
+          if (mediaMeta0.isEmpty) {
             if (fps.isEmpty)
               Seq.empty[(Long, Long, Int)]
                 .toDF("doc_id_a", "doc_id_b", "hamming")
-            else if (mediaOverlapOn) {
+            else {
               // build ⊥ selfJoin: both read the checkpointed fps and
               // the built store has no reader inside this fold
-              innerBg("fold: media store build") {
+              inner("fold: media store build") {
                 HammingStore.build(fps, msd, "doc_id", "fp",
                   mediaMaxDist, bits = 64, cells = storeCells)
               }
               HammingJoin.selfJoin(fps, "doc_id", "fp", mediaMaxDist,
                 bits = 64)
-            } else {
-              val p = HammingJoin.selfJoin(fps, "doc_id", "fp",
-                mediaMaxDist, bits = 64)
-              HammingStore.build(fps, msd, "doc_id", "fp", mediaMaxDist,
-                bits = 64, cells = storeCells)
-              p
             }
-          } else if (mediaOverlapOn) {
+          } else
             // fused probe+append with the append half on the pool —
             // the pairs return as soon as they are materialized; the
-            // append joins `inner` and completes before this side job
-            // returns (HammingStore mirrors the signature store's
-            // overlapped form; the store meta was prefetched at the
-            // fold's head)
-            val (p, appendDone) = HammingStore.probeThenAppendOverlapped(
-              s, msd, fps, new java.util.concurrent.Executor {
-                def execute(r: Runnable): Unit = foldPool.execute(
-                  new Runnable {
-                    def run(): Unit = graft.Hygiene.labeled(
-                      s, "fold: media store")(r.run())
-                  })
-              }, preloadedMeta = mediaMeta0.flatten)
-            inner += appendDone
-            p
-          } else HammingStore.probeThenAppend(s, msd, fps)
+            // append joins the inner scope (HammingStore mirrors the
+            // signature store's overlapped form; the store meta was
+            // prefetched at the fold's head)
+            inner.overlapped("fold: media store")(
+              HammingStore.probeThenAppendOverlapped(s, msd, fps, _,
+                preloadedMeta = mediaMeta0))
         if (!mPairs.isEmpty)
           mPairs.write.mode("append")
             .parquet(Compaction.resolveLive(fs, mediaPairsDir(stateDir)))
-        if (!mediaOverlapOn && ledgerNeeded)
-          ledgerWrite()
-        awaitInner()
-      } catch {
-        case t: Throwable =>
-          // join the in-flight inner jobs before propagating — the
-          // fold's recovery must see a stable partial state (their own
-          // failures are secondary to the primary error)
-          try awaitInner() catch { case _: Throwable => () }
-          throw t
       }
       maybeCrash(s, "post-media")
     } } // the dirtiest recovery window
@@ -762,32 +709,24 @@ object CorpusPipelineDelta {
             cfg.nearDupThreshold, sorted = false)
           // the built store has no reader inside this fold (the probe
           // path is next increment's) — overlap it with retention/decon
-          bg("fold: neardup store build") {
+          jobs("fold: neardup store build") {
             NearDupSignatureStore.build(withToks, stPath,
               cfg.nearDupThreshold, storeCells)
           }
           p
         }
-      } else {
+      } else
         // fused probe+append with the APPEND half overlapped: the
         // pairs return as soon as they are materialized; the append's
-        // writes join `pending` and complete before the commit point.
+        // writes join the scope and complete before the commit point.
         // sorted = false (r17): retention consumes the pairs as a SET,
         // so the probe's contract orderBy would be a wasted
         // exchange+sort inside its materializing job; the store meta
         // was prefetched beside the fold's head jobs.
-        val (p, appendDone) = NearDupSignatureStore
-          .probeThenAppendOverlapped(s, stPath, withToks,
-            new java.util.concurrent.Executor {
-              def execute(r: Runnable): Unit = foldPool.execute(
-                new Runnable {
-                  def run(): Unit =
-                    graft.Hygiene.labeled(s, "fold: neardup store")(r.run())
-                })
-            }, sorted = false, preloadedMeta = storeMeta0)
-        pending += "fold: neardup store append" -> appendDone
-        p
-      } }
+        jobs.overlapped("fold: neardup store")(
+          NearDupSignatureStore.probeThenAppendOverlapped(s, stPath,
+            withToks, _, sorted = false, preloadedMeta = storeMeta0))
+    }
     maybeCrash(s, "post-store")
 
 
@@ -812,11 +751,11 @@ object CorpusPipelineDelta {
     // (gram table prefetched at the fold's head; see evalGramsF)
     val deconDelta = CorpusPipeline.externalDecon(retainedDelta,
       "__toks", evalDocs, cfg,
-      evalGramsPre = evalGramsF.map(f => Await.result(f, Duration.Inf)))
+      evalGramsPre = Some(Await.result(evalGramsF, Duration.Inf)))
 
     // (step 6, the digest-ledger append, was launched onto the pool
-    // right after the journal — see the OVERLAP note above; it is
-    // awaited with every other side job before the commit point, so
+    // right after the journal — see the OVERLAP note above; the scope
+    // joins it with every other side job before the commit point, so
     // the ledger is never half-an-increment ahead of the mix/meta the
     // commit protocol below swaps in)
 
@@ -842,7 +781,7 @@ object CorpusPipelineDelta {
       .filterNot(_.isNullAt(1))
       .map(b => math.max(b.getLong(1), prevMediaMax.getOrElse(Long.MinValue)))
       .orElse(prevMediaMax)
-    bg("fold: meta stage") {
+    jobs("fold: meta stage") {
       val metaNext = s"${metaDir(stateDir)}__next"
       fs.delete(new Path(metaNext), true)
       Seq((newMax, batchTag.orElse(meta0.lastBatch), fp, bLo, bHi, bN,
@@ -855,7 +794,6 @@ object CorpusPipelineDelta {
     // 7. mixture quotas: merge the delta's survivors into the persisted
     // top-quota state and re-rank (the batch operator over
     // state ∪ delta — ≤ Σ quotas + |delta| rows)
-    val mPath = mixDir(stateDir)
     graft.Hygiene.labeled(s, "fold: mix stage") {
     // data-derived reduce partitions for the stage (r17 session 2, the
     // CC-loop rule at the fold's tail): every reduce side in this plan
@@ -885,11 +823,8 @@ object CorpusPipelineDelta {
     mixed.coalesce(1).write.mode("overwrite").parquet(next)
     } // scoped parts
     } // fold: mix stage
+    } // pool scope: every pool-side job is durable from here on
 
-    // every pool-side job must be durable before the commit decision —
-    // the pre-commit state a crash here leaves is then exactly the
-    // sequential form's
-    awaitPending()
     maybeCrash(s, "pre-commit")
     // ---- COMMIT: the marker flips recovery from roll-back to
     // roll-forward; everything after it is idempotent-completable ----
@@ -909,14 +844,6 @@ object CorpusPipelineDelta {
     maybeCrash(s, "mid-retire")
     fs.delete(new Path(commitMark(stateDir)), false)
     fs.delete(new Path(metaCopy(stateDir)), true)
-    } catch {
-      case t: Throwable =>
-        // join every in-flight side job before propagating — recovery
-        // must see a stable, not still-mutating, partial state (their
-        // own failures are secondary to the primary error)
-        try awaitPending() catch { case _: Throwable => () }
-        throw t
-    }
     } // fold lease
   }
 
@@ -986,29 +913,6 @@ object CorpusPipelineDelta {
     * first ([[graft.operators.MaintenanceLease.break]] on `stateDir`
     * and `stateDir/store`), then [[recoverFold]]. */
   private[graft] val CrashPointConf = "spark.graft.delta.crashpoint"
-
-  /** Conf: "off" disables the fold's eval-gram prefetch (r17) — the
-    * measurement/diagnostic seam for same-session A/Bs; any other
-    * value (or absence) keeps the prefetch on. */
-  private[graft] val EvalGramPrefetchConf =
-    "spark.graft.delta.evalGramPrefetch"
-
-  /** Conf: "off" runs the digest-ledger hit probe inline at its old
-    * position instead of prefetching it beside the fold's head jobs
-    * (r17 session 2) — same-session A/B seam. */
-  private[graft] val HitsPrefetchConf = "spark.graft.delta.hitsPrefetch"
-
-  /** Conf: "off" runs the media side job's internal chain in its old
-    * strictly sequential shape (fingerprint → meta read → probe+append
-    * → pair log → ledger on one thread) instead of overlapping its
-    * independent halves (r17 session 2) — same-session A/B seam. */
-  private[graft] val MediaOverlapConf = "spark.graft.delta.mediaOverlap"
-
-  /** Conf: "off" materializes the gate+exact-dedup cut inline at its
-    * old position (one fused job, ledger anti-join included) instead
-    * of cutting `within` from the fold's head and leaving the
-    * anti-join lazy (r17 session 2) — same-session A/B seam. */
-  private[graft] val CutPrefetchConf = "spark.graft.delta.cutPrefetch"
   private[graft] final class InjectedCrash(point: String)
       extends RuntimeException(s"injected crash at $point")
   private def maybeCrash(s: SparkSession, point: String): Unit =

@@ -52,7 +52,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("adaptive loop partitioning restores the session conf — on " +
-      "success, on the non-convergence throw, and when the seam is off") {
+      "success and on the non-convergence throw") {
     import spark.implicits._
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
@@ -75,16 +75,6 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(spark.conf.get(key) == before,
       "the non-convergence throw must restore the conf too")
-    // seam off: same labels, conf untouched throughout
-    spark.conf.set(ConnectedComponents.AdaptivePartsConf, "off")
-    try {
-      val off = ConnectedComponents.labels(
-          ids.toDF("id"), edges.toDF("src", "dst"),
-          driverFinishEdgeCap = 0L, driverWholeGraphNodeCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(off == got)
-      assert(spark.conf.get(key) == before)
-    } finally spark.conf.unset(ConnectedComponents.AdaptivePartsConf)
   }
 
   test("a 200-node chain converges in O(log n) pointer-jumping rounds") {

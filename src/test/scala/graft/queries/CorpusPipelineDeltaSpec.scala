@@ -155,6 +155,9 @@ class CorpusPipelineDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       CorpusPipelineDelta.applyIncrement(
         corpus.filter($"doc_id" <= maxId / 2), state, cfg)
     }
+    // the refused fold joined every job it launched before throwing
+    val active = org.apache.spark.ActiveJobs.of(spark.sparkContext)
+    assert(active.isEmpty, s"Spark jobs $active outlived the refused fold")
     assert(e1.getMessage.contains("strictly greater"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       CorpusPipelineDelta.applyIncrement(corpus,

@@ -83,6 +83,13 @@ class CorpusPipelineRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(d: DataFrame): Set[String] =
     d.collect().map(_.mkString("|")).toSet
 
+  /** A failed fold has joined every job it launched: none outlives it
+    * (or the lease it released). */
+  private def assertNoActiveJobs(after: String): Unit = {
+    val active = org.apache.spark.ActiveJobs.of(spark.sparkContext)
+    assert(active.isEmpty, s"Spark jobs $active still running after $after")
+  }
+
   private def crashAt[A](point: String)(f: => A): Unit = {
     spark.conf.set(CorpusPipelineDelta.CrashPointConf, point)
     try intercept[CorpusPipelineDelta.InjectedCrash](f)
@@ -108,6 +115,7 @@ class CorpusPipelineRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       val before = snapshot(state)
       crashAt(point)(
         CorpusPipelineDelta.foldIncrement(inc2, state, cfg))
+      assertNoActiveJobs(s"the $point crash")
       assert(fs.exists(new Path(s"$state/journal")),
         s"[$point] crashed fold left no journal")
       val refusal = intercept[IllegalStateException](
@@ -285,10 +293,12 @@ class CorpusPipelineRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val e1 = intercept[IllegalArgumentException](
       CorpusPipelineDelta.foldIncrement(inc2, state,
         cfg.copy(quotas = Map("src0" -> 3))))
+    assertNoActiveJobs("the quota-change refusal")
     assert(e1.getMessage.contains("different Config"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException](
       CorpusPipelineDelta.foldIncrement(inc2, state,
         cfg.copy(nearDupThreshold = 0.9)))
+    assertNoActiveJobs("the threshold-change refusal")
     assert(e2.getMessage.contains("different Config"), e2.getMessage)
     // the refusals mutated nothing: the chain continues under the
     // original config — with a TAIL-ONLY change, which is legitimate
