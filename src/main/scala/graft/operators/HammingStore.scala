@@ -106,7 +106,10 @@ object HammingStore {
     * `maxDist` exactly as [[HammingJoin.newPairs]]' does (B = maxDist
     * + 2 by default — the pigeonhole needs B > maxDist); `cells` is
     * the partition grain of the band table (raise it with corpus size —
-    * a probe's scan cost is the touched-cell fraction of the store). */
+    * a probe's scan cost is the touched-cell fraction of the store).
+    * Every write of the band table (build, append, deduping compact) is
+    * hash-clustered on cell: at most one file per touched cell per
+    * write, with the task count set by AQE from the bytes written. */
   def build(fp: DataFrame, dir: String, idCol: String, fpCol: String,
       maxDist: Int, bits: Int = 64, numBands: Int = 0,
       cells: Int = 64,
@@ -130,9 +133,10 @@ object HammingStore {
       // cluster rows onto their cell BEFORE the partitioned write
       // (the sig-store finding): without it every input partition
       // writes a sliver into every cell and probes pay one file-open
-      // per sliver. One shuffle at build time; `cells` tasks each
-      // writing whole cells.
-      bandsFor(dt, meta).repartition(cells, col("cell"))
+      // per sliver. One shuffle at build time, hash-clustered on cell:
+      // each cell lands in exactly one task, so the write adds ≤1 file
+      // per cell; AQE sizes the task count.
+      bandsFor(dt, meta).repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/bands")
       // meta commits LAST (ADVICE r15): `exists` is keyed on meta, so a
       // crash anywhere above leaves exists()==false and a replaying
@@ -168,10 +172,12 @@ object HammingStore {
     // ⟺ empty bands, so the fused path answers emptiness from driver
     // metadata instead of one more limit-probe job (guide §2.6)
     if (knownEmpty.getOrElse(bands.isEmpty)) return
-    // cell-clustered like build: each append adds ≤1 file per cell,
-    // not one per (input partition × cell) — file count stays
-    // O(cells × increments), compactable per cell dir
-    bands.repartition(m.cells, col("cell"))
+    // hash-clustered on cell like build: each append adds ≤1 file per
+    // touched cell, not one per (input partition × cell) — file count
+    // stays O(cells × increments), compactable per cell dir. No
+    // partition count: AQE never coalesces a fixed-count shuffle, so a
+    // count would cost that many tasks however small the increment.
+    bands.repartition(col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(bandsLive(spark, dir))
   }
@@ -378,7 +384,7 @@ object HammingStore {
       targetBytes: Long = 128L * 1024 * 1024,
       dedupe: Boolean = false): (Int, Int) =
     MaintenanceLease.withLease(spark, dir, "compact") {
-      val m = readMeta(spark, dir) // store must exist; meta untouched
+      readMeta(spark, dir) // store must exist; meta untouched
       if (!dedupe)
         Compaction.compactPartitioned(spark, s"$dir/bands", "cell=",
           targetBytes)
@@ -401,9 +407,10 @@ object HammingStore {
             fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
           // `cell` comes back as the hive partition column; the distinct
           // runs over (id, f, band, bkey, cell) — duplicates land in the
-          // same cell by construction, so the set semantics are global
+          // same cell by construction, so the set semantics are global;
+          // hash-clustered on cell, so ≤1 file per cell, AQE-sized tasks
           spark.read.parquet(bandsLive(spark, dir)).distinct()
-            .repartition(m.cells, col("cell"))
+            .repartition(col("cell"))
             .write.mode("overwrite").partitionBy("cell").parquet(tmp)
           Compaction.swapDir(spark, s"$dir/bands", tmp)
           (before, countParts())

@@ -124,7 +124,10 @@ object NearDupSignatureStore {
     * banding shape derives from `threshold` exactly as the inline
     * operator's does; `cells` is the partition grain of the signature
     * table (raise it with corpus size — a probe's scan cost is the
-    * touched-cell fraction of the store). */
+    * touched-cell fraction of the store). Every write of the signature
+    * table (build, append) is hash-clustered on cell: at most one file
+    * per touched cell per write, with the task count set by AQE from
+    * the bytes written. */
   def build(corpus: DataFrame, dir: String, threshold: Double = 0.7,
       cells: Int = 64): Unit = {
     val spark = corpus.sparkSession
@@ -167,8 +170,9 @@ object NearDupSignatureStore {
     // it every input partition writes a sliver into every cell (~input
     // partitions × cells tiny files) and probes pay one file-open per
     // sliver — measured 2× the whole probe at sf0.1. One shuffle at
-    // build time; `cells` tasks each writing whole cells.
-    sigsFor(dt, meta).repartition(cells, col("cell"))
+    // build time, hash-clustered on cell: each cell lands in exactly one
+    // task, so the write adds ≤1 file per cell; AQE sizes the task count.
+    sigsFor(dt, meta).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/sigs")
     }
   }
@@ -213,10 +217,12 @@ object NearDupSignatureStore {
     if (m.mask_complete && deltaHasNullMask.getOrElse(
         sigs.filter($"mask".isNull).limit(1).count() > 0))
       writeMeta(spark, dir, m.copy(mask_complete = false))
-    // cell-clustered like build: each append adds ≤1 file per cell,
-    // not one per (input partition × cell) — the store's file count
-    // stays O(cells × increments), compactable per cell dir
-    sigs.repartition(m.cells, $"cell")
+    // hash-clustered on cell like build: each append adds ≤1 file per
+    // touched cell, not one per (input partition × cell) — the store's
+    // file count stays O(cells × increments), compactable per cell dir.
+    // No partition count: AQE never coalesces a fixed-count shuffle, so
+    // a count would cost that many tasks however small the increment.
+    sigs.repartition($"cell")
       .write.mode("append").partitionBy("cell")
       .parquet(sigsLive(spark, dir))
     // same row-group-stats discipline as build (see build's note)
@@ -264,8 +270,9 @@ object NearDupSignatureStore {
     * semantics are unchanged from [[probeThenAppend]] — the fused
     * form's relaxed window (pairs not yet durable when the store
     * mutates) is the same either way and is covered by the caller's
-    * exactly-once contract. */
-  /** `sorted = false` skips the probe result's contract orderBy — for
+    * exactly-once contract.
+    *
+    * `sorted = false` skips the probe result's contract orderBy — for
     * callers that consume the pairs as a SET (the delta pipeline's
     * greedy retention): the sort is a full exchange+sort of the pair
     * relation paid inside the probe's materializing job for nothing.

@@ -197,6 +197,52 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     rm(dir)
   }
 
+  test("a small append is hash-clustered on cell: exactly one new file " +
+      "per touched cell, fewer tasks than `cells`, probes unchanged") {
+    import spark.implicits._
+    val c0 = fps(300, 83L, 0)
+    val d1 = fps(12, 83L, 1000000)
+    val dir = tmp("hamstore_append_tasks")
+    HammingStore.build(df(c0), dir, "img_id", "fp", maxDist = 3,
+      bits = 64, cells = 64)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def filesPerCell(): Map[String, Int] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/bands"))
+        .filter(_.getPath.getName.startsWith("cell="))
+        .map(c => c.getPath.getName -> fs.listStatus(c.getPath)
+          .count(_.getPath.getName.startsWith("part-")))
+        .toMap.withDefaultValue(0)
+    val before = filesPerCell()
+
+    val appendTasks = org.apache.spark.TaskCount.during(spark.sparkContext) {
+      HammingStore.append(spark, dir, df(d1))
+    }
+    // every job of the append together (meta read, emptiness check,
+    // band write) stays below one task per cell
+    assert(appendTasks < 64, s"append ran $appendTasks tasks for 64 cells")
+
+    val touched = spark.read.parquet(s"$dir/bands")
+      .filter($"id" >= 1000000L).select($"cell").distinct()
+      .collect().map(r => s"cell=${r.getInt(0)}").toSet
+    assert(touched.nonEmpty, "degenerate fixture")
+    val after = filesPerCell()
+    for (c <- before.keySet ++ after.keySet)
+      assert(after(c) - before(c) == (if (touched(c)) 1 else 0),
+        s"$c: ${before(c)} -> ${after(c)} files (touched=${touched(c)})")
+
+    // the appended store probes exactly as newPairs on the grown corpus
+    val d2 = fps(24, 83L, 2000000) ++
+      d1.take(3).map { case (id, f) => (id + 1500000, f) } // dups of d1
+    val got = pairs(HammingStore.probe(spark, dir, df(d2)))
+    val want = pairs(HammingJoin.newPairs(df(c0 ++ d1), df(d2),
+      "img_id", "fp", maxDist = 3, bits = 64))
+    assert(want.nonEmpty, "degenerate fixture")
+    assert(got == want,
+      s"diff: ${(got -- want).take(5)} / ${(want -- got).take(5)}")
+    rm(dir)
+  }
+
   test("compact: probe identical before/after, maxFilesPerCell drops " +
       "to 1, banding meta untouched") {
     val dir = tmp("hamstore_compact")

@@ -182,6 +182,51 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("a small append is hash-clustered on cell: exactly one new file " +
+      "per touched cell, fewer tasks than `cells`, probes unchanged") {
+    import spark.implicits._
+    val c0 = corpus(71, 200)
+    val d1 = corpus(73, 12, from = 5000L)
+    val dir = tmp("sigstore_append_tasks")
+    NearDupSignatureStore.build(df(c0), dir, threshold = 0.5, cells = 64)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def filesPerCell(): Map[String, Int] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sigs"))
+        .filter(_.getPath.getName.startsWith("cell="))
+        .map(c => c.getPath.getName -> fs.listStatus(c.getPath)
+          .count(_.getPath.getName.startsWith("part-")))
+        .toMap.withDefaultValue(0)
+    val before = filesPerCell()
+
+    val appendTasks = org.apache.spark.TaskCount.during(spark.sparkContext) {
+      NearDupSignatureStore.append(spark, dir, df(d1))
+    }
+    // every job of the append together (meta read, vocabulary check,
+    // signature and ledger writes) stays below one task per cell
+    assert(appendTasks < 64, s"append ran $appendTasks tasks for 64 cells")
+
+    val touched = spark.read.parquet(s"$dir/sigs")
+      .filter($"doc_id" >= 5000L).select($"cell").distinct()
+      .collect().map(r => s"cell=${r.getInt(0)}").toSet
+    assert(touched.nonEmpty, "degenerate fixture")
+    val after = filesPerCell()
+    for (c <- before.keySet ++ after.keySet)
+      assert(after(c) - before(c) == (if (touched(c)) 1 else 0),
+        s"$c: ${before(c)} -> ${after(c)} files (touched=${touched(c)})")
+
+    // the appended store probes exactly as the inline operator does on
+    // the grown corpus
+    val d2 = corpus(79, 20, from = 9000L)
+    val got = pairs(NearDupSignatureStore.probe(spark, dir, df(d2)))
+    val want = pairs(graft.queries.ApproxOps
+      .minhashNearDupPairsDelta(df(c0 ++ d1), df(d2), 0.5))
+    assert(want.nonEmpty, "degenerate fixture")
+    assert(got == want, s"diff: ${(got.keySet -- want.keySet).take(5)} / " +
+      s"${(want.keySet -- got.keySet).take(5)}")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("generic-verify prune cap: above maxInFilterIds the toksets prune " +
       "degrades to the left-semi shuffle join with the identical pair set") {
     // generic regime (vocab 200 > 62); cap=1 forces the fallback on any
