@@ -270,7 +270,7 @@ object ScaleBench {
     // re-signs all 500k corpus docs on every call.
     if (fams("1")) {
       val storeDir = s"$work/sigstore500k"
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/meta"))) {
+      if (!operators.NearDupSignatureStore.exists(spark, storeDir)) {
         val t0 = System.nanoTime()
         operators.NearDupSignatureStore.build(toks(docs500kP), storeDir,
           threshold = 0.7, cells = 4096)
@@ -306,7 +306,7 @@ object ScaleBench {
     // ---- 1b. the same loop at 2M docs: the corpus-rescan crossover ----
     if (fams("1b")) {
       val storeDir = s"$work/sigstore2m"
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/meta"))) {
+      if (!operators.NearDupSignatureStore.exists(spark, storeDir)) {
         val t0 = System.nanoTime()
         operators.NearDupSignatureStore.build(toks(docs2mP), storeDir,
           threshold = 0.7, cells = 8192)

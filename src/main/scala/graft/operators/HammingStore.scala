@@ -49,46 +49,25 @@ private[graft] case class HammingStoreMeta(bits: Int, max_dist: Int,
   * increment, never |corpus|². Maintenance is the standard machinery:
   * [[MaintenanceLease]] excludes concurrent writers, [[compact]]
   * merges append slivers per cell and commits via
-  * [[Compaction.swapDir]] (pointer-swapped on object stores). */
+  * [[Compaction.swapDir]] (pointer-swapped on object stores); the
+  * `cell=` layout's mechanics are [[CellStore]]'s. */
 object HammingStore {
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val layout = new CellStore[HammingStoreMeta]("Hamming store")
 
-  /** The band table's PHYSICAL live tree — on object stores [[compact]]
-    * commits via pointer indirection ([[Compaction.swapDir]]); every
-    * read AND in-place append resolves through this
-    * (rename-mode/never-swapped stores pay one `exists`). */
-  private def bandsLive(spark: SparkSession, dir: String): String =
-    Compaction.resolveLive(fsOf(spark, dir), s"$dir/bands")
+  /** The band table's PHYSICAL live tree ([[CellStore.live]]): every
+    * read AND in-place append resolves through this, and the fold's
+    * journal snapshots and rolls back the same tree. */
+  private[graft] def bandsLive(spark: SparkSession, dir: String): String =
+    layout.live(spark, dir, "bands")
 
   /** True iff a store was built at `dir`. */
   def exists(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))
+    layout.exists(spark, dir)
 
-  /** Pre-read hook for pipeline callers that overlap the store-meta
-    * read with their own head jobs (the [[NearDupSignatureStore]]
-    * pattern): Some(meta) when a store exists at `dir`, else None. The
-    * caller owns the exclusion that keeps the early read stable. */
+  /** [[CellStore.preloadMeta]], for `preloadedMeta` below. */
   private[graft] def preloadMeta(spark: SparkSession,
-      dir: String): Option[HammingStoreMeta] =
-    if (exists(spark, dir)) Some(readMeta(spark, dir)) else None
-
-  private def writeMeta(spark: SparkSession, dir: String,
-      m: HammingStoreMeta): Unit = {
-    import spark.implicits._
-    Seq(m).toDF().repartition(1).write.mode("overwrite")
-      .parquet(s"$dir/meta")
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): HammingStoreMeta = {
-    require(exists(spark, dir), s"no Hamming store at $dir (run build)")
-    val r = spark.read.parquet(s"$dir/meta").collect().head
-    HammingStoreMeta(r.getAs[Int]("bits"), r.getAs[Int]("max_dist"),
-      r.getAs[Int]("num_bands"), r.getAs[Int]("cells"),
-      r.getAs[String]("id_col"), r.getAs[String]("fp_col"))
-  }
+      dir: String): Option[HammingStoreMeta] = layout.preloadMeta(spark, dir)
 
   /** Band decomposition of `fp` in the store's frozen shape:
     * (id, f, band, bkey, cell). */
@@ -107,9 +86,7 @@ object HammingStore {
     * + 2 by default — the pigeonhole needs B > maxDist); `cells` is
     * the partition grain of the band table (raise it with corpus size —
     * a probe's scan cost is the touched-cell fraction of the store).
-    * Every write of the band table (build, append, deduping compact) is
-    * hash-clustered on cell: at most one file per touched cell per
-    * write, with the task count set by AQE from the bytes written. */
+    * `meta` commits last ([[CellStore.build]]). */
   def build(fp: DataFrame, dir: String, idCol: String, fpCol: String,
       maxDist: Int, bits: Int = 64, numBands: Int = 0,
       cells: Int = 64,
@@ -126,24 +103,10 @@ object HammingStore {
       require(!dt.isEmpty,
         "build needs a non-empty corpus (defer build to the first increment)")
       val meta = HammingStoreMeta(bits, maxDist, b, cells, idCol, fpCol)
-      // a RE-build over a pointer-mode store must drop the indirection
-      // first (the NearDupSignatureStore rule): writing in place under
-      // a live pointer would strand readers on the old generation
-      Compaction.clearIndirection(fsOf(spark, dir), s"$dir/bands")
-      // cluster rows onto their cell BEFORE the partitioned write
-      // (the sig-store finding): without it every input partition
-      // writes a sliver into every cell and probes pay one file-open
-      // per sliver. One shuffle at build time, hash-clustered on cell:
-      // each cell lands in exactly one task, so the write adds ≤1 file
-      // per cell; AQE sizes the task count.
-      bandsFor(dt, meta).repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/bands")
-      // meta commits LAST (ADVICE r15): `exists` is keyed on meta, so a
-      // crash anywhere above leaves exists()==false and a replaying
-      // caller re-runs the build path (which converges — the overwrite
-      // replaces any partial bands tree). The old meta-first order left
-      // a meta-without-bands store that every later probe died on.
-      writeMeta(spark, dir, meta)
+      layout.build(spark, dir, meta, "bands") {
+        CellStore.writeClustered(bandsFor(dt, meta), "overwrite",
+          layout.path(dir, "bands"))
+      }
     }
   }
 
@@ -158,7 +121,7 @@ object HammingStore {
   def append(spark: SparkSession, dir: String, delta: DataFrame,
       staleMs: Long = MaintenanceLease.DefaultStaleMs): Unit =
     MaintenanceLease.withLease(spark, dir, "append", staleMs) {
-      val m = readMeta(spark, dir)
+      val m = layout.readMeta(spark, dir)
       appendPrepared(spark, dir, m, bandsFor(delta, m))
     }
 
@@ -171,15 +134,8 @@ object HammingStore {
     // a probe already collected the delta's touched cells — empty cells
     // ⟺ empty bands, so the fused path answers emptiness from driver
     // metadata instead of one more limit-probe job (guide §2.6)
-    if (knownEmpty.getOrElse(bands.isEmpty)) return
-    // hash-clustered on cell like build: each append adds ≤1 file per
-    // touched cell, not one per (input partition × cell) — file count
-    // stays O(cells × increments), compactable per cell dir. No
-    // partition count: AQE never coalesces a fixed-count shuffle, so a
-    // count would cost that many tasks however small the increment.
-    bands.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(bandsLive(spark, dir))
+    if (!knownEmpty.getOrElse(bands.isEmpty))
+      CellStore.writeClustered(bands, "append", bandsLive(spark, dir))
   }
 
   /** All pairs within Hamming distance ≤ the store's `maxDist` with at
@@ -214,60 +170,34 @@ object HammingStore {
     * where it is not. */
   def probeThenAppend(spark: SparkSession, dir: String,
       delta: DataFrame,
-      staleMs: Long = MaintenanceLease.DefaultStaleMs): DataFrame = {
-    val (out, done) = probeThenAppendOverlapped(spark, dir, delta,
-      new java.util.concurrent.Executor {
-        def execute(r: Runnable): Unit = r.run() // same-thread: sequential
-      }, staleMs = staleMs)
-    scala.concurrent.Await.result(done,
-      scala.concurrent.duration.Duration.Inf)
-    out
-  }
+      staleMs: Long = MaintenanceLease.DefaultStaleMs): DataFrame =
+    layout.probeThenAppend(spark, dir, staleMs)(
+      probeAndAppend(spark, dir, delta, None))
 
-  /** [[probeThenAppend]] with the APPEND half overlapped (guide §2.6,
-    * the [[NearDupSignatureStore.probeThenAppendOverlapped]] pattern):
-    * the probe's pairs are returned as soon as they are materialized,
-    * while the append's write — which nothing downstream of the pairs
-    * reads — runs on `exec`. The store lease covers probe AND append
-    * exactly as in the sequential form (acquired before the probe,
-    * released after the append, on the executor's thread). The caller
-    * MUST await the returned future before any step that needs the
-    * append durable (a pipeline's commit point); the future carries any
-    * append failure. `preloadedMeta` lets a pipeline overlap the
-    * store-meta read with its own earlier jobs — the caller must hold
-    * (or nest inside) the exclusion that makes the early read stable
-    * (the delta fold's state lease does). */
+  /** [[probeThenAppend]] with the append's write on `exec`
+    * ([[CellStore.probeThenAppendOverlapped]]; await the future before
+    * the append must be durable). `preloadedMeta` lets a pipeline
+    * overlap the store-meta read with its own earlier jobs — the caller
+    * must hold the exclusion that keeps the early read stable (the
+    * delta fold's state lease does). */
   private[graft] def probeThenAppendOverlapped(spark: SparkSession,
       dir: String, delta: DataFrame, exec: java.util.concurrent.Executor,
       preloadedMeta: Option[HammingStoreMeta] = None,
       staleMs: Long = MaintenanceLease.DefaultStaleMs)
-      : (DataFrame, scala.concurrent.Future[Unit]) = {
-    val probed = scala.concurrent.Promise[DataFrame]()
-    val done = scala.concurrent.Promise[Unit]()
-    exec.execute(new Runnable {
-      def run(): Unit =
-        try {
-          MaintenanceLease.withLease(spark, dir, "probe+append", staleMs) {
-            val (frame, bands, meta, deltaEmpty, release) =
-              probeParts(spark, dir, delta, persistDelta = true,
-                preloadedMeta = preloadedMeta)
-            try {
-              probed.success(frame.localCheckpoint(eager = true))
-              appendPrepared(spark, dir, meta, bands, Some(deltaEmpty))
-            } finally release()
-          }
-          done.success(())
-        } catch {
-          case t: Throwable =>
-            // a pre-probe failure must release the caller's block on
-            // `probed` too; if the probe already succeeded, only the
-            // append future carries the failure
-            probed.tryFailure(t)
-            done.failure(t)
-        }
-    })
-    (scala.concurrent.Await.result(probed.future,
-      scala.concurrent.duration.Duration.Inf), done.future)
+      : (DataFrame, scala.concurrent.Future[Unit]) =
+    layout.probeThenAppendOverlapped(spark, dir, exec, staleMs)(
+      probeAndAppend(spark, dir, delta, preloadedMeta))
+
+  /** The store's part of the fused loop: the probe's pairs, the append
+    * of the same banded increment, the release of the probe's persist. */
+  private def probeAndAppend(spark: SparkSession, dir: String,
+      delta: DataFrame, preloadedMeta: Option[HammingStoreMeta])
+      : (DataFrame, () => Unit, () => Unit) = {
+    val (frame, bands, meta, deltaEmpty, release) =
+      probeParts(spark, dir, delta, persistDelta = true,
+        preloadedMeta = preloadedMeta)
+    (frame, () => appendPrepared(spark, dir, meta, bands, Some(deltaEmpty)),
+      release)
   }
 
   private def probeParts(spark: SparkSession, dir: String,
@@ -275,7 +205,7 @@ object HammingStore {
       preloadedMeta: Option[HammingStoreMeta] = None)
       : (DataFrame, DataFrame, HammingStoreMeta, Boolean, () => Unit) = {
     import spark.implicits._
-    val m = preloadedMeta.getOrElse(readMeta(spark, dir))
+    val m = preloadedMeta.getOrElse(layout.readMeta(spark, dir))
     val bands0 = bandsFor(delta, m)
     val bands = if (persistDelta) bands0.persist() else bands0
     // the probe's touched cells — driver METADATA (≤ m.cells values),
@@ -324,26 +254,14 @@ object HammingStore {
   final case class StoreStats(cells: Int, bits: Int, maxDist: Int,
       numBands: Int, bandFiles: Int, maxFilesPerCell: Int, bandRows: Long)
 
-  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Int =
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p)
-      .count(f => f.isFile && f.getPath.getName.startsWith("part-"))
-
   /** NOT free at scale: `bandRows` is a zero-column parquet count —
     * footer-cheap, but it still lists and opens every live file (a
     * 1.6 TB store is ~13k footer reads). Maintenance-cadence calls
     * only; don't put this in a per-batch loop. */
   def stats(spark: SparkSession, dir: String): StoreStats = {
-    val m = readMeta(spark, dir)
-    val fs = fsOf(spark, dir)
+    val m = layout.readMeta(spark, dir)
     val live = bandsLive(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(live)
-    val perCell =
-      if (!fs.exists(root)) Array.empty[Int]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .map(p => partFiles(fs, p.getPath))
+    val perCell = CellStore.filesPerCell(layout.fs(spark, dir), live)
     StoreStats(m.cells, m.bits, m.max_dist, m.num_bands, perCell.sum,
       if (perCell.isEmpty) 0 else perCell.max,
       spark.read.parquet(live).count())
@@ -384,35 +302,28 @@ object HammingStore {
       targetBytes: Long = 128L * 1024 * 1024,
       dedupe: Boolean = false): (Int, Int) =
     MaintenanceLease.withLease(spark, dir, "compact") {
-      readMeta(spark, dir) // store must exist; meta untouched
+      layout.readMeta(spark, dir) // store must exist; meta untouched
+      val bands = layout.path(dir, "bands")
       if (!dedupe)
-        Compaction.compactPartitioned(spark, s"$dir/bands", "cell=",
-          targetBytes)
+        Compaction.compactPartitioned(spark, bands, "cell=", targetBytes)
       else {
-        val fs = fsOf(spark, dir)
-        Compaction.recoverSwap(spark, s"$dir/bands")
-        def countParts(): Int = {
-          val root = new org.apache.hadoop.fs.Path(bandsLive(spark, dir))
-          if (!fs.exists(root)) 0
-          else fs.listStatus(root)
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("cell="))
-            .map(p => partFiles(fs, p.getPath)).sum
-        }
+        val fs = layout.fs(spark, dir)
+        Compaction.recoverSwap(spark, bands)
+        def countParts(): Int =
+          CellStore.filesPerCell(fs, bandsLive(spark, dir)).sum
         val before = countParts()
         if (before == 0) (0, 0) // empty/never-built tree: no-op
         else {
-          val tmp = Compaction.stagingDir(fs, s"$dir/bands")
+          val tmp = Compaction.stagingDir(fs, bands)
           if (fs.exists(new org.apache.hadoop.fs.Path(tmp)))
             fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
           // `cell` comes back as the hive partition column; the distinct
           // runs over (id, f, band, bkey, cell) — duplicates land in the
-          // same cell by construction, so the set semantics are global;
-          // hash-clustered on cell, so ≤1 file per cell, AQE-sized tasks
-          spark.read.parquet(bandsLive(spark, dir)).distinct()
-            .repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-          Compaction.swapDir(spark, s"$dir/bands", tmp)
+          // same cell by construction, so the set semantics are global
+          CellStore.writeClustered(
+            spark.read.parquet(bandsLive(spark, dir)).distinct(),
+            "overwrite", tmp)
+          Compaction.swapDir(spark, bands, tmp)
           (before, countParts())
         }
       }

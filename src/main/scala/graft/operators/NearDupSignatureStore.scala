@@ -45,50 +45,36 @@ private[graft] case class StoreMeta(threshold: Double, band_rows: Int,
   * appended increment carrying out-of-vocabulary tokens writes NULL
   * masks and flips `mask_complete` off — later probes fall back to the
   * generic `toksets` verify (correctness unchanged; the map-side mask
-  * verify is an optimization, never a semantic). */
+  * verify is an optimization, never a semantic).
+  *
+  * The `cell=` layout's mechanics are [[CellStore]]'s. */
 object NearDupSignatureStore {
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val layout = new CellStore[StoreMeta]("signature store")
 
-  /** The swapped tables' PHYSICAL live trees — on object stores the
-    * compact commits via pointer indirection ([[Compaction.swapDir]])
-    * and the data lives in a generation dir; rename-mode/never-swapped
-    * stores resolve to the plain path at one `exists` of cost. Every
-    * read AND every in-place append must go through these. */
-  private def sigsLive(spark: SparkSession, dir: String): String =
-    Compaction.resolveLive(fsOf(spark, dir), s"$dir/sigs")
-  private def toksLive(spark: SparkSession, dir: String): String =
-    Compaction.resolveLive(fsOf(spark, dir), s"$dir/toksets")
+  /** The tables' PHYSICAL live trees ([[CellStore.live]]). Every read
+    * AND every in-place append goes through these; the fold's journal
+    * snapshots and rolls back the same trees. */
+  private[graft] def sigsLive(spark: SparkSession, dir: String): String =
+    layout.live(spark, dir, "sigs")
+  private[graft] def toksLive(spark: SparkSession, dir: String): String =
+    layout.live(spark, dir, "toksets")
+
+  /** The one-row `meta` table, which vocabulary demotion overwrites (the
+    * fold's journal keeps a byte copy of it). */
+  private[graft] def metaPath(dir: String): String = layout.metaPath(dir)
 
   /** True iff a store was built at `dir`. */
   def exists(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))
+    layout.exists(spark, dir)
 
-  /** Pre-read hook for pipeline callers that overlap the store-meta
-    * read with their own head jobs (see [[probeThenAppendOverlapped]]'s
-    * `preloadedMeta`): Some(meta) when a store exists at `dir`, else
-    * None. The caller owns the exclusion that keeps the early read
-    * stable. */
+  /** The ids already in the store: the `toksets` ledger's doc_id. */
+  private[graft] def ledgerIds(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(toksLive(spark, dir)).select(col("doc_id"))
+
+  /** [[CellStore.preloadMeta]], for `preloadedMeta` below. */
   private[graft] def preloadMeta(spark: SparkSession,
-      dir: String): Option[StoreMeta] =
-    if (exists(spark, dir)) Some(readMeta(spark, dir)) else None
-
-  private def writeMeta(spark: SparkSession, dir: String,
-      m: StoreMeta): Unit = {
-    import spark.implicits._
-    Seq(m).toDF().repartition(1).write.mode("overwrite")
-      .parquet(s"$dir/meta")
-  }
-
-  private def readMeta(spark: SparkSession, dir: String): StoreMeta = {
-    require(exists(spark, dir), s"no signature store at $dir (run build)")
-    val r = spark.read.parquet(s"$dir/meta").collect().head
-    StoreMeta(r.getAs[Double]("threshold"), r.getAs[Int]("band_rows"),
-      r.getAs[Int]("cells"), r.getAs[Boolean]("mask_complete"),
-      r.getAs[scala.collection.Seq[String]]("vocab").toSeq)
-  }
+      dir: String): Option[StoreMeta] = layout.preloadMeta(spark, dir)
 
   /** Bitmasks of `d` (doc_id, toks) under a FIXED bit-index vocabulary
     * (bit i = vocab(i)) — unlike the corpus-derived
@@ -124,10 +110,8 @@ object NearDupSignatureStore {
     * banding shape derives from `threshold` exactly as the inline
     * operator's does; `cells` is the partition grain of the signature
     * table (raise it with corpus size — a probe's scan cost is the
-    * touched-cell fraction of the store). Every write of the signature
-    * table (build, append) is hash-clustered on cell: at most one file
-    * per touched cell per write, with the task count set by AQE from
-    * the bytes written. */
+    * touched-cell fraction of the store). `meta` commits last
+    * ([[CellStore.build]]). */
   def build(corpus: DataFrame, dir: String, threshold: Double = 0.7,
       cells: Int = 64): Unit = {
     val spark = corpus.sparkSession
@@ -151,29 +135,19 @@ object NearDupSignatureStore {
     val meta = StoreMeta(threshold,
       graft.queries.ApproxOps.bandRowsFor(threshold), cells,
       mask_complete = vocab.nonEmpty || distinctToks.isEmpty, vocab)
-    writeMeta(spark, dir, meta)
-    // a RE-build over a pointer-mode store must drop the indirection
-    // first: writing in place under a live pointer would leave every
-    // reader resolving to the old generation forever
-    Compaction.clearIndirection(fsOf(spark, dir), s"$dir/sigs")
-    Compaction.clearIndirection(fsOf(spark, dir), s"$dir/toksets")
-    // sortWithinPartitions, NOT a shuffle: the generic-verify probe
-    // prunes `toksets` with an id-set filter that parquet can only turn
-    // into ROW-GROUP skipping if the row groups have tight doc_id
-    // min/max — randomly ordered ids make every group span the whole
-    // range and the "pruned" scan decodes the entire ledger (r10
-    // ScaleBench finding at 2M docs). A per-partition local sort gives
-    // each row group a narrow id quantile at zero shuffle cost.
-    dt.sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$dir/toksets")
-    // cluster rows onto their cell BEFORE the partitioned write: without
-    // it every input partition writes a sliver into every cell (~input
-    // partitions × cells tiny files) and probes pay one file-open per
-    // sliver — measured 2× the whole probe at sf0.1. One shuffle at
-    // build time, hash-clustered on cell: each cell lands in exactly one
-    // task, so the write adds ≤1 file per cell; AQE sizes the task count.
-    sigsFor(dt, meta).repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/sigs")
+    layout.build(spark, dir, meta, "sigs", "toksets") {
+      // sortWithinPartitions, NOT a shuffle: the generic-verify probe
+      // prunes `toksets` with an id-set filter that parquet can only
+      // turn into ROW-GROUP skipping if the row groups have tight doc_id
+      // min/max — randomly ordered ids make every group span the whole
+      // range and the "pruned" scan decodes the entire ledger (r10
+      // ScaleBench finding at 2M docs). A per-partition local sort gives
+      // each row group a narrow id quantile at zero shuffle cost.
+      dt.sortWithinPartitions("doc_id")
+        .write.mode("overwrite").parquet(layout.path(dir, "toksets"))
+      CellStore.writeClustered(sigsFor(dt, meta), "overwrite",
+        layout.path(dir, "sigs"))
+    }
     }
   }
 
@@ -192,7 +166,7 @@ object NearDupSignatureStore {
   def append(spark: SparkSession, dir: String, delta: DataFrame): Unit =
     MaintenanceLease.withLease(spark, dir, "append") {
     import spark.implicits._
-    val m = readMeta(spark, dir)
+    val m = layout.readMeta(spark, dir)
     val dt = delta.select($"doc_id", $"toks")
     val sigs = sigsFor(dt, m).persist()
     try appendPrepared(spark, dir, m, dt, sigs)
@@ -216,15 +190,8 @@ object NearDupSignatureStore {
     // run the check here.
     if (m.mask_complete && deltaHasNullMask.getOrElse(
         sigs.filter($"mask".isNull).limit(1).count() > 0))
-      writeMeta(spark, dir, m.copy(mask_complete = false))
-    // hash-clustered on cell like build: each append adds ≤1 file per
-    // touched cell, not one per (input partition × cell) — the store's
-    // file count stays O(cells × increments), compactable per cell dir.
-    // No partition count: AQE never coalesces a fixed-count shuffle, so
-    // a count would cost that many tasks however small the increment.
-    sigs.repartition($"cell")
-      .write.mode("append").partitionBy("cell")
-      .parquet(sigsLive(spark, dir))
+      layout.writeMeta(spark, dir, m.copy(mask_complete = false))
+    CellStore.writeClustered(sigs, "append", sigsLive(spark, dir))
     // same row-group-stats discipline as build (see build's note)
     dt.sortWithinPartitions("doc_id")
       .write.mode("append").parquet(toksLive(spark, dir))
@@ -248,29 +215,13 @@ object NearDupSignatureStore {
     * keep probe → durable write → append where it is not
     * ([[graft.streaming.StreamingNearDup]]'s reconcile). */
   def probeThenAppend(spark: SparkSession, dir: String,
-      delta: DataFrame): DataFrame = {
-    val (out, done) = probeThenAppendOverlapped(spark, dir, delta,
-      new java.util.concurrent.Executor {
-        def execute(r: Runnable): Unit = r.run() // same-thread: sequential
-      })
-    scala.concurrent.Await.result(done,
-      scala.concurrent.duration.Duration.Inf)
-    out
-  }
+      delta: DataFrame): DataFrame =
+    layout.probeThenAppend(spark, dir)(probeAndAppend(spark, dir, delta))
 
-  /** [[probeThenAppend]] with the APPEND half overlapped (guide §2.6:
-    * overlap independent jobs): the probe's pairs are returned as soon
-    * as they are materialized, while the append's three writes — which
-    * nothing downstream of the pairs reads — run on `exec`. The store
-    * lease covers probe AND append exactly as in the sequential form
-    * (acquired before the probe, released after the append, on the
-    * executor's thread). The caller MUST await the returned future
-    * before any step that needs the append durable (e.g. a pipeline's
-    * commit point); the future carries any append failure. Crash
-    * semantics are unchanged from [[probeThenAppend]] — the fused
-    * form's relaxed window (pairs not yet durable when the store
-    * mutates) is the same either way and is covered by the caller's
-    * exactly-once contract.
+  /** [[probeThenAppend]] with the append's three writes on `exec`
+    * ([[CellStore.probeThenAppendOverlapped]]; await the future before
+    * the append must be durable). Crash semantics are those of
+    * [[probeThenAppend]].
     *
     * `sorted = false` skips the probe result's contract orderBy — for
     * callers that consume the pairs as a SET (the delta pipeline's
@@ -284,33 +235,21 @@ object NearDupSignatureStore {
       dir: String, delta: DataFrame, exec: java.util.concurrent.Executor,
       sorted: Boolean = true,
       preloadedMeta: Option[StoreMeta] = None)
-      : (DataFrame, scala.concurrent.Future[Unit]) = {
-    val probed = scala.concurrent.Promise[DataFrame]()
-    val done = scala.concurrent.Promise[Unit]()
-    exec.execute(new Runnable {
-      def run(): Unit =
-        try {
-          MaintenanceLease.withLease(spark, dir, "probe+append") {
-            val (frame, sigs, dt, m, release, hasNull) =
-              probeParts(spark, dir, delta, persistDelta = true,
-                sorted = sorted, preloadedMeta = preloadedMeta)
-            try {
-              probed.success(frame.localCheckpoint(eager = true))
-              appendPrepared(spark, dir, m, dt, sigs, Some(hasNull))
-            } finally release()
-          }
-          done.success(())
-        } catch {
-          case t: Throwable =>
-            // a pre-probe failure must release the caller's block on
-            // `probed` too; if the probe already succeeded, only the
-            // append future carries the failure
-            probed.tryFailure(t)
-            done.failure(t)
-        }
-    })
-    (scala.concurrent.Await.result(probed.future,
-      scala.concurrent.duration.Duration.Inf), done.future)
+      : (DataFrame, scala.concurrent.Future[Unit]) =
+    layout.probeThenAppendOverlapped(spark, dir, exec)(
+      probeAndAppend(spark, dir, delta, sorted, preloadedMeta))
+
+  /** The store's part of the fused loop: the probe's pairs, the append
+    * of the same signed increment, the release of the probe's persists. */
+  private def probeAndAppend(spark: SparkSession, dir: String,
+      delta: DataFrame, sorted: Boolean = true,
+      preloadedMeta: Option[StoreMeta] = None)
+      : (DataFrame, () => Unit, () => Unit) = {
+    val (frame, sigs, dt, m, release, hasNull) =
+      probeParts(spark, dir, delta, persistDelta = true,
+        sorted = sorted, preloadedMeta = preloadedMeta)
+    (frame, () => appendPrepared(spark, dir, m, dt, sigs, Some(hasNull)),
+      release)
   }
 
   /** All near-dup pairs INTRODUCED by `delta` (doc_id, toks) against
@@ -390,7 +329,7 @@ object NearDupSignatureStore {
       sorted: Boolean = true,
       preloadedMeta: Option[StoreMeta] = None): ProbeParts = {
     import spark.implicits._
-    val m = preloadedMeta.getOrElse(readMeta(spark, dir))
+    val m = preloadedMeta.getOrElse(layout.readMeta(spark, dir))
     val dt = delta.select($"doc_id", $"toks")
     val deltaSigs0 = sigsFor(dt, m)
     val deltaSigs = if (persistDelta) deltaSigs0.persist() else deltaSigs0
@@ -530,31 +469,16 @@ object NearDupSignatureStore {
       vocabSize: Int, sigFiles: Int, maxFilesPerCell: Int, sigRows: Long,
       toksetFiles: Int, toksetRows: Long)
 
-  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-
-  private def cellDirs(fs: org.apache.hadoop.fs.FileSystem,
-      sigsPath: String): Array[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(sigsPath)
-    if (!fs.exists(root)) Array.empty
-    else fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .map(_.getPath)
-  }
-
   def stats(spark: SparkSession, dir: String): StoreStats = {
-    val m = readMeta(spark, dir)
-    val fs = fsOf(spark, dir)
+    val m = layout.readMeta(spark, dir)
+    val fs = layout.fs(spark, dir)
     val sigsPath = sigsLive(spark, dir)
     val toksPath = toksLive(spark, dir)
-    val perCell = cellDirs(fs, sigsPath).map(p => partFiles(fs, p).length)
+    val perCell = CellStore.filesPerCell(fs, sigsPath)
     StoreStats(m.cells, m.mask_complete, m.vocab.size,
       perCell.sum, if (perCell.isEmpty) 0 else perCell.max,
       spark.read.parquet(sigsPath).count(),
-      partFiles(fs, new org.apache.hadoop.fs.Path(toksPath)).length,
+      CellStore.partFiles(fs, new org.apache.hadoop.fs.Path(toksPath)),
       spark.read.parquet(toksPath).count())
   }
 
@@ -586,15 +510,17 @@ object NearDupSignatureStore {
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactStats =
     MaintenanceLease.withLease(spark, dir, "compact") {
-    readMeta(spark, dir) // store must exist; meta itself is 1 file, untouched
-    val fs = fsOf(spark, dir)
-    val (sigsBefore, sigsAfter) =
-      Compaction.compactPartitioned(spark, s"$dir/sigs", "cell=", targetBytes)
-    Compaction.recoverSwap(spark, s"$dir/toksets")
-    val toksBefore =
-      partFiles(fs, new org.apache.hadoop.fs.Path(toksLive(spark, dir))).length
+    layout.readMeta(spark, dir) // store must exist; meta is untouched
+    val fs = layout.fs(spark, dir)
+    val toks = layout.path(dir, "toksets")
+    def toksFiles() = CellStore.partFiles(fs,
+      new org.apache.hadoop.fs.Path(toksLive(spark, dir)))
+    val (sigsBefore, sigsAfter) = Compaction.compactPartitioned(spark,
+      layout.path(dir, "sigs"), "cell=", targetBytes)
+    Compaction.recoverSwap(spark, toks)
+    val toksBefore = toksFiles()
     val toksTmp = {
-      val t = Compaction.stagingDir(fs, s"$dir/toksets")
+      val t = Compaction.stagingDir(fs, toks)
       val p = new org.apache.hadoop.fs.Path(t)
       if (fs.exists(p)) fs.delete(p, true) // leftover from a dead run
       t
@@ -603,8 +529,7 @@ object NearDupSignatureStore {
     // up by build/append's sortWithinPartitions) through the rewrite
     Compaction.compact(spark, toksLive(spark, dir), toksTmp, targetBytes,
       sortCol = Some("doc_id"))
-    Compaction.swapDir(spark, s"$dir/toksets", toksTmp)
-    CompactStats(sigsBefore, sigsAfter, toksBefore,
-      partFiles(fs, new org.apache.hadoop.fs.Path(toksLive(spark, dir))).length)
+    Compaction.swapDir(spark, toks, toksTmp)
+    CompactStats(sigsBefore, sigsAfter, toksBefore, toksFiles())
     }
 }

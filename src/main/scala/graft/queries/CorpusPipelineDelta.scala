@@ -968,9 +968,9 @@ object CorpusPipelineDelta {
     // the append targets are generation dirs, and rollback lists the
     // same resolution (no swap of these dirs happens inside a fold, so
     // the pointer cannot move between journal and recovery)
-    walkFiles(fs, new Path(Compaction.resolveLive(fs, s"$sd/sigs")))
+    walkFiles(fs, new Path(NearDupSignatureStore.sigsLive(s, sd)))
       .foreach(f => sb ++= s"sig:$f\n")
-    walkFiles(fs, new Path(Compaction.resolveLive(fs, s"$sd/toksets")))
+    walkFiles(fs, new Path(NearDupSignatureStore.toksLive(s, sd)))
       .foreach(f => sb ++= s"tok:$f\n")
     walkFiles(fs, new Path(Compaction.resolveLive(fs, digestsDir(stateDir))))
       .foreach(f => sb ++= s"dig:$f\n")
@@ -979,8 +979,7 @@ object CorpusPipelineDelta {
     // `meta` is write-once at build (never demoted like the sig
     // store's), so no byte copy is needed — a genesis-fold crash
     // deletes the whole store dir via its existed=false flag instead.
-    walkFiles(fs,
-        new Path(Compaction.resolveLive(fs, s"${mediaStoreDir(stateDir)}/bands")))
+    walkFiles(fs, new Path(HammingStore.bandsLive(s, mediaStoreDir(stateDir))))
       .foreach(f => sb ++= s"hsb:$f\n")
     walkFiles(fs, new Path(Compaction.resolveLive(fs, mediaPairsDir(stateDir))))
       .foreach(f => sb ++= s"mpr:$f\n")
@@ -988,7 +987,8 @@ object CorpusPipelineDelta {
       .foreach(f => sb ++= s"msn:$f\n")
     fs.delete(new Path(metaCopy(stateDir)), true)
     if (storeExisted)
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$sd/meta"),
+      org.apache.hadoop.fs.FileUtil.copy(fs,
+        new Path(NearDupSignatureStore.metaPath(sd)),
         fs, new Path(metaCopy(stateDir)), false,
         s.sparkContext.hadoopConfiguration)
     val out = fs.create(new Path(journalPath(stateDir)), false)
@@ -1105,14 +1105,15 @@ object CorpusPipelineDelta {
           val sd = storeDir(stateDir)
           if (!existed("storeExisted")) fs.delete(new Path(sd), true)
           else {
-            rollbackDir(fs, Compaction.resolveLive(fs, s"$sd/sigs"),
+            rollbackDir(fs, NearDupSignatureStore.sigsLive(s, sd),
               known("sig:"))
-            rollbackDir(fs, Compaction.resolveLive(fs, s"$sd/toksets"),
+            rollbackDir(fs, NearDupSignatureStore.toksLive(s, sd),
               known("tok:"))
             if (fs.exists(new Path(metaCopy(stateDir)))) {
-              fs.delete(new Path(s"$sd/meta"), true)
-              require(fs.rename(new Path(metaCopy(stateDir)),
-                new Path(s"$sd/meta")), "store-meta restore failed")
+              val storeMeta = new Path(NearDupSignatureStore.metaPath(sd))
+              fs.delete(storeMeta, true)
+              require(fs.rename(new Path(metaCopy(stateDir)), storeMeta),
+                "store-meta restore failed")
             }
           }
           if (!existed("digestsExisted"))
@@ -1124,8 +1125,7 @@ object CorpusPipelineDelta {
           // and the deletes below hit dirs that cannot exist
           val msd = mediaStoreDir(stateDir)
           if (!existed("mediaStoreExisted")) fs.delete(new Path(msd), true)
-          else rollbackDir(fs, Compaction.resolveLive(fs, s"$msd/bands"),
-            known("hsb:"))
+          else rollbackDir(fs, HammingStore.bandsLive(s, msd), known("hsb:"))
           if (!existed("mediaPairsExisted"))
             fs.delete(new Path(mediaPairsDir(stateDir)), true)
           else rollbackDir(fs,

@@ -266,7 +266,7 @@ object StreamingNearDup {
     // re-delivered overflow ids are naturally skipped)
     val deltaDocs = (if (NearDupSignatureStore.exists(s, storeDir))
       docsWithToks.join(overflow.join(
-        s.read.parquet(s"$storeDir/toksets").select(col("doc_id")),
+        NearDupSignatureStore.ledgerIds(s, storeDir),
         Seq("doc_id"), "left_anti"), "doc_id")
     else docsWithToks.join(overflow, "doc_id")).persist()
     try {

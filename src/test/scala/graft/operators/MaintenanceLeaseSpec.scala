@@ -39,7 +39,15 @@ class FlakyReadFileSystem extends graft.filemover.FakeHdfsFileSystem {
   * no-ops, not manufactured crash states; root side files survive the
   * swap; a truncated meta dir degrades the health probe to its
   * documented sentinel instead of killing it. */
-class MaintenanceLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaintenanceLeaseSpec extends AnyFunSuite with BeforeAndAfterAll
+    with org.scalatest.concurrent.TimeLimits {
+
+  // a refused probe+append must fail its caller, not block it: interrupt
+  // the test thread if the call hangs
+  implicit val signaler: org.scalatest.concurrent.Signaler =
+    org.scalatest.concurrent.ThreadSignaler
+  private def failFast[A](f: => A): A =
+    failAfter(org.scalatest.time.Span(60, org.scalatest.time.Seconds))(f)
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -83,11 +91,41 @@ class MaintenanceLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       NearDupSignatureStore.compact(spark, dir)
     }
     assert(e2.getMessage.contains("rival-compactor@elsewhere"))
+    val e3 = failFast(intercept[IllegalStateException] {
+      NearDupSignatureStore.probeThenAppend(spark, dir, docs(4))
+    })
+    assert(e3.getMessage.contains("rival-compactor@elsewhere"))
     // the refused calls must not have broken the live lease
     assert(fs.exists(lease), "refused writer deleted the holder's lease")
     fs.delete(lease, false)
     NearDupSignatureStore.append(spark, dir, docs(4)) // re-admitted
     assert(!fs.exists(lease), "lease not released after append")
+
+    // the Hamming store's fused probe+append takes the same lease
+    import spark.implicits._
+    val hdir = tmp("lease_hamstore")
+    HammingStore.build((0L until 20L).map(i => (i, i * 0x9E3779B97F4A7C15L))
+      .toDF("doc_id", "fp"), hdir, "doc_id", "fp", maxDist = 3)
+    val hlease = holdLease(hdir, "rival-compactor@elsewhere")
+    val e4 = failFast(intercept[IllegalStateException] {
+      HammingStore.probeThenAppend(spark, hdir,
+        Seq((100L, 7L)).toDF("doc_id", "fp"))
+    })
+    assert(e4.getMessage.contains("rival-compactor@elsewhere"))
+    assert(fs.exists(hlease), "refused writer deleted the holder's lease")
+    fs.delete(hlease, false)
+
+    // a dir with no store fails both fused calls (no meta), and frees
+    // the lease the call took
+    val none = tmp("lease_nostore")
+    Seq(
+      () => NearDupSignatureStore.probeThenAppend(spark, none, docs(4)),
+      () => HammingStore.probeThenAppend(spark, none,
+        Seq((100L, 7L)).toDF("doc_id", "fp"))).foreach { call =>
+      val e = failFast(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains("run build"), e.getMessage)
+      assert(!fs.exists(new Path(s"${none}__lease")), "lease not released")
+    }
   }
 
   test("ivf append/compact take the same lease on the index dir") {

@@ -4,6 +4,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+object FailSigsWrites { @volatile var on = false }
+
+/** Local filesystem whose file creates under a `sigs` directory fail on
+  * demand: a build that dies while writing the signature table. */
+class FailSigsWriteFileSystem extends graft.filemover.FakeHdfsFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  override def getUri: java.net.URI = java.net.URI.create("failsigs://nn")
+  override def getScheme: String = "failsigs"
+  private def check(f: Path): Unit =
+    if (FailSigsWrites.on && f.toUri.getPath.split("/").contains("sigs"))
+      throw new java.io.IOException(s"injected write failure: $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
 /** The persisted band-signature store vs the inline incremental LSH
   * operator (VERDICT r7 task 1): probing a stored index must equal the
   * inline x105 pair set exactly, across appends and across the
@@ -130,6 +158,31 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${(got1.keySet -- want1.keySet).take(5)} / " +
       s"${(want1.keySet -- got1.keySet).take(5)}")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("a build that fails writing `sigs` leaves exists() == false " +
+      "(meta commits last), and the re-run converges") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failsigs.impl", classOf[FailSigsWriteFileSystem].getName)
+    val dir = s"failsigs://nn${tmp("sigstore_failbuild")}/store"
+    val c0 = corpus(11, 60)
+    FailSigsWrites.on = true
+    try intercept[Exception] {
+      NearDupSignatureStore.build(df(c0), dir, threshold = 0.5)
+    } finally FailSigsWrites.on = false
+    assert(!NearDupSignatureStore.exists(spark, dir),
+      "a build without its signature table must read as not-built")
+    // the replaying caller takes the build path again and converges
+    NearDupSignatureStore.build(df(c0), dir, threshold = 0.5)
+    val d1 = corpus(13, 20, from = 1000L)
+    val got = pairs(NearDupSignatureStore.probe(spark, dir, df(d1)))
+    val want = pairs(graft.queries.ApproxOps
+      .minhashNearDupPairsDelta(df(c0), df(d1), 0.5))
+    assert(want.nonEmpty && got == want, s"diff: " +
+      s"${(got.keySet -- want.keySet).take(5)} / " +
+      s"${(want.keySet -- got.keySet).take(5)}")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(new java.net.URI(dir).getPath).getParentFile)
   }
 
   test("probe scans only the increment's cells: static PartitionFilters " +

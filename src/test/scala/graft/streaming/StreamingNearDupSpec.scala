@@ -473,4 +473,50 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairsNow() == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
   }
+
+  test("reconcile reads the store's ledger through its live tree: no " +
+      "re-probed docs and no missing path across pointer-mode compacts " +
+      "on a copy-rename filesystem") {
+    import spark.implicits._
+    import graft.operators.NearDupSignatureStore
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl",
+      classOf[graft.operators.NoRenameFileSystem].getName)
+    conf.set("graft.swap.atomic-rename.norename", "false")
+    // docs 1,2,3 identical, docs 4,5 identical
+    val docsWithToks = Seq(
+      (1L, Seq("a", "b", "c")), (2L, Seq("a", "b", "c")),
+      (3L, Seq("a", "b", "c")), (4L, Seq("x", "y", "z")),
+      (5L, Seq("x", "y", "z"))).toDF("doc_id", "toks")
+    val local = java.nio.file.Files.createTempDirectory("e09ptr").toString
+    val work = s"norename://nn$local"
+    val store = s"$work/sigstore"
+    def writeIds(ids: Seq[Long], mode: String): Unit =
+      ids.toDF("doc_id").write.mode(mode).parquet(s"$work/overflow_ids")
+    def reconcile(): Unit =
+      StreamingNearDup.reconcile(spark, work, docsWithToks, 0.7)
+    def ledgered() = NearDupSignatureStore.stats(spark, store).toksetRows
+    Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
+      .write.parquet(s"$work/stream_matches")
+    writeIds(Seq(1L, 2L), "overwrite")
+    reconcile() // builds the store
+    // pointer mode: the plain `toksets` tree stays behind as the grace
+    // copy of the pre-compact ledger
+    NearDupSignatureStore.compact(spark, store)
+    writeIds(Seq(3L, 4L), "append")
+    reconcile() // appends {3,4} into the live generation
+    assert(ledgered() == 4L)
+    reconcile() // nothing new
+    assert(ledgered() == 4L, "reconcile re-appended ledgered docs")
+    // the second pointer-mode compact retires the plain tree
+    NearDupSignatureStore.compact(spark, store)
+    writeIds(Seq(5L), "append")
+    reconcile()
+    assert(ledgered() == 5L)
+    val pairs = spark.read.parquet(s"$work/pairs").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)), pairs)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(local))
+  }
 }
+
