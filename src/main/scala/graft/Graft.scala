@@ -280,17 +280,19 @@ object Graft {
     operators.NearDupSignatureStore.append(spark, dir, delta)
 
   /** Compact a [[buildNearDupSignatureStore]] store's data files —
-    * the maintenance job for append's O(cells × increments) file
-    * growth: per-cell shuffle-free merge of `sigs`, flat merge of the
-    * `toksets` ledger, rename-swapped; probe output is byte-identical
-    * before and after. See [[operators.NearDupSignatureStore.compact]]. */
+    * the maintenance job for append's one-run-per-increment file
+    * growth: `sigs`' L0 runs fold into the cells (with none, each cell
+    * merges shuffle-free), flat merge of the `toksets` ledger,
+    * swap-committed; probe output is identical before and after. See
+    * [[operators.NearDupSignatureStore.compact]]. */
   def compactNearDupSignatureStore(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024)
       : operators.NearDupSignatureStore.CompactStats =
     operators.NearDupSignatureStore.compact(spark, dir, targetBytes)
 
   /** Health of a [[buildNearDupSignatureStore]] store (files/rows per
-    * table, worst cell fan-out, vocabulary regime) — the signal for
+    * table, worst cell fan-out, vocabulary regime, and `l0Files`, the
+    * compaction debt) — the signal for
     * scheduling [[compactNearDupSignatureStore]]. See
     * [[operators.NearDupSignatureStore.stats]]. */
   def nearDupSignatureStoreStats(spark: SparkSession, dir: String)
@@ -395,15 +397,16 @@ object Graft {
       delta: DataFrame): Unit =
     operators.HammingStore.append(spark, dir, delta)
 
-  /** Compact a [[buildHammingStore]] store's band files (per-cell
-    * shuffle-free merge, swap-committed; probes identical). Returns
-    * (filesBefore, filesAfter). */
+  /** Compact a [[buildHammingStore]] store's band files (L0 runs fold
+    * into the cells; with none, each cell merges shuffle-free;
+    * swap-committed; probes identical). Returns (filesBefore,
+    * filesAfter). */
   def compactHammingStore(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
     operators.HammingStore.compact(spark, dir, targetBytes)
 
   /** Health of a [[buildHammingStore]] store — the compact-cadence
-    * signal. */
+    * signal (`l0Files`, the compaction debt). */
   def hammingStoreStats(spark: SparkSession, dir: String)
       : operators.HammingStore.StoreStats =
     operators.HammingStore.stats(spark, dir)

@@ -2,24 +2,36 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.duration.Duration
 import scala.reflect.runtime.universe.TypeTag
 
-/** The persisted hive `cell=` store layout shared by
+/** The persisted, log-structured hive `cell=` store layout shared by
   * [[NearDupSignatureStore]] and [[HammingStore]]. A store at `dir` is
-  * data tables `dir/<table>` — the probed one partitioned by `cell` and
-  * written only through [[CellStore.writeClustered]]; compaction may
-  * swap a table through a pointer, so reads and in-place appends go
-  * through [[live]] — plus `dir/meta`, one parquet row of the store's
-  * frozen shape `M` (a top-level case class: a nested one forces the
-  * encoder onto its interpreted path). [[exists]] is keyed on `meta`
-  * and [[build]] commits it LAST, so a build that dies anywhere leaves
-  * `exists() == false` and the caller's replay builds again (the
-  * overwrite replaces any partial table). `kind` names the store in
-  * errors. */
+  * data tables `dir/<table>` plus `dir/meta`, one parquet row of the
+  * store's frozen shape `M` (a top-level case class: a nested one forces
+  * the encoder onto its interpreted path). The probed table's live
+  * tree holds two levels (compaction may swap a table through a
+  * pointer, so reads and appends go through [[live]]):
+  *
+  *  - the CELLS, `cell=<n>/` dirs written only by [[build]]'s and
+  *    [[compact]]'s [[CellStore.writeClustered]] (or the per-cell merge),
+  *    ~one file per cell;
+  *  - the L0 RUNS, flat under `_l0/` (the LSM tree's level 0): each
+  *    append writes its rows as one run sorted on `cell`
+  *    ([[CellStore.appendRun]]), so an increment adds one file, not one
+  *    per touched cell. Spark's file index skips `_`-prefixed dirs, so
+  *    a plain read of the live tree sees only the cells; the probe
+  *    ([[CellStore.scan]]) and the full-table read ([[CellStore.table]])
+  *    union L0 in, and [[compact]] folds L0 into the cells.
+  *
+  * [[exists]] is keyed on `meta` and [[build]] commits it LAST, so a
+  * build that dies anywhere leaves `exists() == false` and the caller's
+  * replay builds again (the overwrite replaces any partial table, L0
+  * included). `kind` names the store in errors. */
 private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
@@ -112,25 +124,102 @@ private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
     Await.result(done, Duration.Inf)
     out
   }
+
+  /** Compact `table`, committed by one [[Compaction.swapDir]]; returns
+    * its data files (cells plus L0) before and after. With no L0 run
+    * and no `dedupe` this is the per-cell merge
+    * ([[Compaction.compactPartitioned]]: shuffle-free, files near
+    * `targetBytes`, byte-identical rows per cell). Otherwise it is one
+    * [[CellStore.writeClustered]] rewrite of cells ∪ L0 — ~one file per
+    * cell, no L0 left — that keeps the row multiset, or with `dedupe`
+    * reduces it to the set. The caller holds the store lease. */
+  def compact(spark: SparkSession, dir: String, table: String,
+      targetBytes: Long, dedupe: Boolean = false): (Int, Int) = {
+    val fs = this.fs(spark, dir)
+    val p = path(dir, table)
+    Compaction.recoverSwap(spark, p)
+    def files(l: String): Int =
+      CellStore.filesPerCell(fs, l).sum + CellStore.l0Files(fs, l)
+    val l = live(spark, dir, table)
+    if (!dedupe && CellStore.l0Files(fs, l) == 0)
+      Compaction.compactPartitioned(spark, p, "cell=", targetBytes)
+    else {
+      val before = files(l)
+      if (before == 0) (0, 0) // empty/never-built tree: no-op
+      else {
+        val tmp = Compaction.stagingDir(fs, p)
+        fs.delete(new Path(tmp), true) // leftover from a dead run
+        // `cell` comes back as the hive partition column and as an L0
+        // data column; duplicates share a cell by construction, so a
+        // `distinct` here has global set semantics
+        val rows = CellStore.table(spark, l)
+        CellStore.writeClustered(if (dedupe) rows.distinct() else rows,
+          "overwrite", tmp)
+        Compaction.swapDir(spark, p, tmp)
+        (before, files(live(spark, dir, table)))
+      }
+    }
+  }
 }
 
 private[graft] object CellStore {
 
   /** Write `rows` (carrying a `cell` column) into the hive `cell=` table
-    * at `path`, hash-clustered on cell first. Without the shuffle every
+    * at `path`, hash-clustered on cell first — build's and the clustered
+    * compaction's write. Without the shuffle every
     * input partition writes a sliver into every cell (~input partitions
     * × cells tiny files) and probes pay one file-open per sliver —
     * measured 2× the whole probe at sf0.1. Hash clustering puts each
     * cell in exactly one task, and AQE only merges whole partitions, so
-    * every write (build, append, deduping compact) adds at most one
-    * file per touched cell: the file count stays O(cells × writes),
-    * compactable per cell dir. No partition count: AQE never coalesces
-    * a fixed-count shuffle, so a count would cost that many tasks
-    * however small the write; without one AQE sizes the task count from
-    * the bytes written. */
+    * the write leaves exactly one file per cell. No partition count:
+    * AQE never coalesces a fixed-count shuffle, so a count would cost
+    * that many tasks however small the write; without one AQE sizes the
+    * task count from the bytes written. */
   def writeClustered(rows: DataFrame, mode: String, path: String): Unit =
     rows.repartition(col("cell"))
       .write.mode(mode).partitionBy("cell").parquet(path)
+
+  /** The L0 dir of the table whose live tree is `live`. */
+  def l0(live: String): String = s"$live/_l0"
+
+  /** Append `rows` (carrying a `cell` column) as one L0 run under
+    * `live`: the same AQE-sized hash clustering as [[writeClustered]],
+    * but into flat files sorted on `cell` (row-group stats then prune
+    * the probe's `cell IN (…)` filter) — a small increment is one file,
+    * however many cells it touches. A cell-dir append would create one
+    * file per touched cell (the 150-doc fold increment: 60 files plus
+    * their checksums, ~85 % of the fold's state growth). */
+  def appendRun(rows: DataFrame, live: String): Unit =
+    rows.repartition(col("cell")).sortWithinPartitions("cell")
+      .write.mode("append").parquet(l0(live))
+
+  /** The L0 runs under `live` read with `schema` (the cell scan's — no
+    * inference job), or None when there are none. */
+  private def l0Read(spark: SparkSession, live: String,
+      schema: StructType): Option[DataFrame] = {
+    val p = new Path(l0(live))
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      None
+    else Some(spark.read.schema(schema).parquet(p.toString))
+  }
+
+  /** The probe's read: the pruned `cell=` dirs ([[PrunedRead]]) unioned
+    * with the L0 runs, both filtered to `cells`. */
+  def scan(spark: SparkSession, live: String, cells: Seq[Int]): DataFrame = {
+    val pruned = PrunedRead.partitions(spark, live, "cell", cells)
+    l0Read(spark, live, pruned.schema).fold(pruned)(r => pruned.unionByName(
+      r.filter(if (cells.isEmpty) lit(false) else col("cell").isin(cells: _*))))
+  }
+
+  /** The whole table under `live`: every cell ∪ every L0 run. */
+  def table(spark: SparkSession, live: String): DataFrame = {
+    val cells = spark.read.parquet(live)
+    l0Read(spark, live, cells.schema).fold(cells)(cells.unionByName(_))
+  }
+
+  /** L0 run files under `live`: the table's compaction debt. */
+  def l0Files(fs: FileSystem, live: String): Int =
+    partFiles(fs, new Path(l0(live)))
 
   /** Number of `part-` files directly under `p` (0 if it is absent). */
   def partFiles(fs: FileSystem, p: Path): Int =

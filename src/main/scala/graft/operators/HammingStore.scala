@@ -24,11 +24,12 @@ private[graft] case class HammingStoreMeta(bits: Int, max_dist: Int,
   *
   *  - `bands` (id, f, band, bkey), HIVE-PARTITIONED BY
   *    `cell = pmod(hash(band, bkey), cells)`: every corpus
-  *    fingerprint's band decomposition, placed by its join key. A
-  *    probe collects the increment's touched cells (driver metadata,
-  *    ≤ `cells` values) and pushes them as a STATIC partition filter,
-  *    so the scan reads only the cells the increment can collide in —
-  *    `PartitionFilters` in the plan, asserted in the spec.
+  *    fingerprint's band decomposition, placed by its join key; each
+  *    append lands as one cell-sorted L0 run until [[compact]] folds
+  *    it in. A probe collects the increment's touched cells (driver
+  *    metadata, ≤ `cells` values) and pushes them as a STATIC partition
+  *    filter (and as a pushed filter on the L0 runs), so the scan reads
+  *    only the cells the increment can collide in — asserted in the spec.
   *  - `meta` (bits, max_dist, num_bands, cells, id_col, fp_col): the
   *    banding geometry, frozen at build time so every probe/append
   *    bands exactly as the build did (a probe banded differently
@@ -48,7 +49,7 @@ private[graft] case class HammingStoreMeta(bits: Int, max_dist: Int,
   * Σ_bucket |store ∩ bucket|·|delta ∩ bucket| — proportional to the
   * increment, never |corpus|². Maintenance is the standard machinery:
   * [[MaintenanceLease]] excludes concurrent writers, [[compact]]
-  * merges append slivers per cell and commits via
+  * folds the L0 runs into the cells and commits via
   * [[Compaction.swapDir]] (pointer-swapped on object stores); the
   * `cell=` layout's mechanics are [[CellStore]]'s. */
 object HammingStore {
@@ -135,7 +136,7 @@ object HammingStore {
     // ⟺ empty bands, so the fused path answers emptiness from driver
     // metadata instead of one more limit-probe job (guide §2.6)
     if (!knownEmpty.getOrElse(bands.isEmpty))
-      CellStore.writeClustered(bands, "append", bandsLive(spark, dir))
+      CellStore.appendRun(bands, bandsLive(spark, dir))
   }
 
   /** All pairs within Hamming distance ≤ the store's `maxDist` with at
@@ -209,13 +210,11 @@ object HammingStore {
     val bands0 = bandsFor(delta, m)
     val bands = if (persistDelta) bands0.persist() else bands0
     // the probe's touched cells — driver METADATA (≤ m.cells values),
-    // pushed as a static partition filter on the store scan; also the
-    // driver-side listing prune (PrunedRead — at high cell counts the
-    // per-probe partition DISCOVERY was the dominant cost, r10 finding)
+    // pushed as a static partition filter on the store scan (cell dirs
+    // discovery-pruned, r10 finding) and as a filter on the L0 runs
     val cellVals = bands.select($"cell").distinct().collect()
       .map(_.getInt(0)).toSeq
-    val store = PrunedRead.partitions(spark, bandsLive(spark, dir),
-      "cell", cellVals)
+    val store = CellStore.scan(spark, bandsLive(spark, dir), cellVals)
     // old–new: pruned store scan ⋈ BROADCAST delta bands — the store
     // side never shuffles (store ids are all pre-increment under the
     // unique-id contract, so orientation is normalized by
@@ -248,11 +247,13 @@ object HammingStore {
 
   // ---- maintenance surface --------------------------------------------
 
-  /** Store health for the compact-cadence decision: `maxFilesPerCell`
-    * ≈ increments since the last [[compact]] (each append adds ≤1 file
-    * per touched cell). */
+  /** Store health for the compact-cadence decision: `l0Files`, the
+    * compaction debt, ≈ increments since the last [[compact]] (each
+    * append adds one L0 run). `bandFiles`/`maxFilesPerCell` count the
+    * cell dirs only; `bandRows` counts cells ∪ L0. */
   final case class StoreStats(cells: Int, bits: Int, maxDist: Int,
-      numBands: Int, bandFiles: Int, maxFilesPerCell: Int, bandRows: Long)
+      numBands: Int, bandFiles: Int, maxFilesPerCell: Int, bandRows: Long,
+      l0Files: Int)
 
   /** NOT free at scale: `bandRows` is a zero-column parquet count —
     * footer-cheap, but it still lists and opens every live file (a
@@ -261,19 +262,24 @@ object HammingStore {
   def stats(spark: SparkSession, dir: String): StoreStats = {
     val m = layout.readMeta(spark, dir)
     val live = bandsLive(spark, dir)
-    val perCell = CellStore.filesPerCell(layout.fs(spark, dir), live)
+    val fs = layout.fs(spark, dir)
+    val perCell = CellStore.filesPerCell(fs, live)
     StoreStats(m.cells, m.bits, m.max_dist, m.num_bands, perCell.sum,
       if (perCell.isEmpty) 0 else perCell.max,
-      spark.read.parquet(live).count())
+      CellStore.table(spark, live).count(), CellStore.l0Files(fs, live))
   }
 
-  /** Rewrite the band table's files near `targetBytes` without touching
-    * contents — per cell directory ([[Compaction.compactPartitioned]]:
-    * shuffle-free merge preserving the hive layout and with it the
-    * probe's static pruning), committed via [[Compaction.swapDir]]
-    * (rename-paired on HDFS/local, pointer-swapped on object stores).
-    * Probe output is byte-identical before and after (asserted in the
-    * spec); `meta` is never touched. Writers are lease-excluded.
+  /** Rewrite the band table's files without touching contents, through
+    * [[CellStore.compact]]: the L0 runs fold into the cells in one
+    * cell-clustered rewrite, or with no L0 present each cell's files
+    * merge shuffle-free near `targetBytes`
+    * ([[Compaction.compactPartitioned]]). Either way the hive layout —
+    * and with it the probe's static pruning — is kept, the commit is
+    * one [[Compaction.swapDir]] (rename-paired on HDFS/local,
+    * pointer-swapped on object stores), probe output is identical
+    * before and after (asserted in the spec), and `meta` is never
+    * touched. Writers are lease-excluded. Returns (files before, files
+    * after), cells and L0 together.
     *
     * `dedupe = true` (round 16 — the E18 crash-bloat GC): the rewrite
     * additionally DISTINCTs the band rows. An at-least-once writer that
@@ -281,51 +287,24 @@ object HammingStore {
     * [[graft.streaming.StreamingImageDedup]] post-store window, or a
     * replayed [[append]]) leaves one duplicate band-row set per crashed
     * batch — correctness-neutral (probes `distinct` their pairs) but
-    * permanent bloat a plain compact deliberately preserves
-    * (byte-identity is its contract). The deduping variant trades that
-    * byte-identity for the GC: same pair output (spec'd), row multiset
-    * reduced to the set. It is one cell-clustered shuffle of the whole
-    * store (the build's write shape, ~1 file per cell) rather than the
-    * plain path's shuffle-free per-cell merge.
+    * permanent bloat a plain compact deliberately preserves (the row
+    * multiset is its contract). The deduping variant trades that for
+    * the GC: same pair output (spec'd), row multiset reduced to the
+    * set. It is always the cell-clustered rewrite (the build's write
+    * shape, ~1 file per cell).
     *
     * Cost, measured not assumed (ScaleBench family 10c, 1024-cell
-    * stores at 10M/40M band rows): the per-cell path is DRIVER-JOB
-    * bound, not data bound — ~1024 near-constant-latency jobs came to
-    * 156–210 s sequential, 33–36 s with [[Compaction.compactPartitioned]]'s
-    * 16-thread pool — while the whole-store shuffle cost 7–14 s at
-    * both sizes. So at these store sizes the deduping rewrite is the
-    * CHEAPER operation; choose the plain path for its byte-identity
-    * guarantee (and its shuffle-freedom once per-cell data actually
-    * dominates job latency), not on an assumption that dedupe is the
-    * expensive one. */
+    * stores at 10M/40M band rows): the per-cell merge is DRIVER-JOB
+    * bound, not data bound — 16–20 s in 64-cell batches — while the
+    * whole-store shuffle cost 7–14 s at both sizes. So at these store
+    * sizes the clustered rewrite is the CHEAPER operation; the per-cell
+    * path's reason is its byte-identity (and its shuffle-freedom once
+    * per-cell data actually dominates job latency). */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024,
       dedupe: Boolean = false): (Int, Int) =
     MaintenanceLease.withLease(spark, dir, "compact") {
       layout.readMeta(spark, dir) // store must exist; meta untouched
-      val bands = layout.path(dir, "bands")
-      if (!dedupe)
-        Compaction.compactPartitioned(spark, bands, "cell=", targetBytes)
-      else {
-        val fs = layout.fs(spark, dir)
-        Compaction.recoverSwap(spark, bands)
-        def countParts(): Int =
-          CellStore.filesPerCell(fs, bandsLive(spark, dir)).sum
-        val before = countParts()
-        if (before == 0) (0, 0) // empty/never-built tree: no-op
-        else {
-          val tmp = Compaction.stagingDir(fs, bands)
-          if (fs.exists(new org.apache.hadoop.fs.Path(tmp)))
-            fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          // `cell` comes back as the hive partition column; the distinct
-          // runs over (id, f, band, bkey, cell) — duplicates land in the
-          // same cell by construction, so the set semantics are global
-          CellStore.writeClustered(
-            spark.read.parquet(bandsLive(spark, dir)).distinct(),
-            "overwrite", tmp)
-          Compaction.swapDir(spark, bands, tmp)
-          (before, countParts())
-        }
-      }
+      layout.compact(spark, dir, "bands", targetBytes, dedupe)
     }
 }

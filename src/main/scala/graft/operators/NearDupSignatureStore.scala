@@ -18,11 +18,12 @@ private[graft] case class StoreMeta(threshold: Double, band_rows: Int,
   *
   *  - `sigs` (doc_id, band, sig, mask?), HIVE-PARTITIONED BY
   *    `cell = pmod(hash(band, sig), cells)`: every corpus doc's banded
-  *    MinHash signatures, placed by their join key. A probe collects
-  *    the increment's touched cells (≤ `cells` values — driver
-  *    metadata) and pushes them as a STATIC partition filter, so the
-  *    scan reads only the cells the increment can collide in —
-  *    `PartitionFilters` in the plan, asserted in the spec.
+  *    MinHash signatures, placed by their join key; each append lands
+  *    as one cell-sorted L0 run until [[compact]] folds it in. A probe
+  *    collects the increment's touched cells (≤ `cells` values —
+  *    driver metadata) and pushes them as a STATIC partition filter
+  *    (and as a pushed filter on the L0 runs), so the scan reads only
+  *    the cells the increment can collide in — asserted in the spec.
   *  - `toksets` (doc_id, toks): the raw token sets, read ONLY by the
   *    generic-vocabulary verify (pruned to candidate ids via a
   *    broadcast join — scanned, never shuffled). In the ≤62-token
@@ -191,7 +192,7 @@ object NearDupSignatureStore {
     if (m.mask_complete && deltaHasNullMask.getOrElse(
         sigs.filter($"mask".isNull).limit(1).count() > 0))
       layout.writeMeta(spark, dir, m.copy(mask_complete = false))
-    CellStore.writeClustered(sigs, "append", sigsLive(spark, dir))
+    CellStore.appendRun(sigs, sigsLive(spark, dir))
     // same row-group-stats discipline as build (see build's note)
     dt.sortWithinPartitions("doc_id")
       .write.mode("append").parquet(toksLive(spark, dir))
@@ -348,14 +349,10 @@ object NearDupSignatureStore {
       collect_set($"cell").as("cells"),
       max(when($"mask".isNull, 1).otherwise(0)).as("hasnull")).collect().head
     val cellVals = probeRow.getAs[scala.collection.Seq[Int]](0).toSeq
-    // Discovery-pruned read: the isin filter below already pruned what
-    // is READ, but plain partition discovery still LISTED all `cells`
-    // dirs per probe — at 8192 cells that listing was ~9 of the drip
-    // probe's 11.5 s (r10 ScaleBench finding; mechanics + measurement
-    // in PrunedRead's scaladoc)
+    // the touched cells' dirs (discovery-pruned: listing all `cells`
+    // dirs was ~9 of an 8192-cell drip probe's 11.5 s, r10) ∪ the L0 runs
     val toksPath = toksLive(spark, dir)
-    val store = PrunedRead.partitions(spark, sigsLive(spark, dir),
-      "cell", cellVals)
+    val store = CellStore.scan(spark, sigsLive(spark, dir), cellVals)
     // map-side mask verify only when the store's masks are complete AND
     // the delta stayed inside the frozen vocabulary. The null-mask
     // answer is computed ONCE (in the aggregate above) and threaded to
@@ -460,14 +457,15 @@ object NearDupSignatureStore {
   // ---- maintenance surface (VERDICT r8 task 1) ------------------------
 
   /** Store health, for the caller deciding compact-vs-rebuild:
-    * `maxFilesPerCell` is the daily-append growth signal (each append
-    * adds ≤1 file per cell, so it ≈ increments since the last
-    * [[compact]]); `toksetFiles` grows the same way (the ledger is
-    * append-only). Row counts are one count job each; the file counts
-    * are driver-side listings. */
+    * `l0Files` is the compaction debt (each append adds one L0 run —
+    * usually one file — so it ≈ increments since the last [[compact]]);
+    * `toksetFiles` grows the same way (the ledger is append-only).
+    * `sigFiles`/`maxFilesPerCell` count the cell dirs only; `sigRows`
+    * counts cells ∪ L0. Row counts are one count job each; the file
+    * counts are driver-side listings. */
   final case class StoreStats(cells: Int, maskComplete: Boolean,
       vocabSize: Int, sigFiles: Int, maxFilesPerCell: Int, sigRows: Long,
-      toksetFiles: Int, toksetRows: Long)
+      toksetFiles: Int, toksetRows: Long, l0Files: Int)
 
   def stats(spark: SparkSession, dir: String): StoreStats = {
     val m = layout.readMeta(spark, dir)
@@ -477,24 +475,24 @@ object NearDupSignatureStore {
     val perCell = CellStore.filesPerCell(fs, sigsPath)
     StoreStats(m.cells, m.mask_complete, m.vocab.size,
       perCell.sum, if (perCell.isEmpty) 0 else perCell.max,
-      spark.read.parquet(sigsPath).count(),
+      CellStore.table(spark, sigsPath).count(),
       CellStore.partFiles(fs, new org.apache.hadoop.fs.Path(toksPath)),
-      spark.read.parquet(toksPath).count())
+      spark.read.parquet(toksPath).count(), CellStore.l0Files(fs, sigsPath))
   }
 
   final case class CompactStats(sigFilesBefore: Int, sigFilesAfter: Int,
       toksetFilesBefore: Int, toksetFilesAfter: Int)
 
-  /** Rewrite the store's data files near `targetBytes` without touching
-    * its contents — the remedy for append's O(cells × increments) file
-    * growth (a year of daily increments is ~365 files per cell and 365
-    * ledger files, and probes pay one file-open per sliver).
+  /** Rewrite the store's data files without touching its contents —
+    * the remedy for append's file growth (a year of daily increments is
+    * ~365 L0 runs and 365 ledger files, and probes pay one file-open
+    * per run).
     *
-    *  - `sigs` compacts PER CELL DIRECTORY
-    *    ([[Compaction.compactPartitioned]]): each cell's files merge
-    *    shuffle-free into ~`targetBytes` files written to a parallel
-    *    tree, preserving the hive layout — and with it the probe's
-    *    static partition pruning;
+    *  - `sigs` compacts through [[CellStore.compact]]: its L0 runs fold
+    *    into the cells in one cell-clustered rewrite (~one file per
+    *    cell); with no L0 present each cell's files merge shuffle-free
+    *    into ~`targetBytes` files instead. Either way the hive layout —
+    *    and with it the probe's static partition pruning — is kept;
     *  - `toksets` (flat append ledger) compacts as one flat dir;
     *  - each table then SWAPS via rename — the probe output is
     *    byte-identical before and after (asserted in the spec), `meta`
@@ -502,7 +500,7 @@ object NearDupSignatureStore {
     *    (the next compact restores the set-aside original).
     *
     * Run it off the probe path on whatever cadence keeps
-    * [[stats]]' `maxFilesPerCell` small (weekly against daily appends,
+    * [[stats]]' `l0Files` small (weekly against daily appends,
     * say). Concurrent writers are refused via [[MaintenanceLease]]:
     * build/append/compact all take the store lease, so an append racing
     * a compact fails loudly instead of losing its increment in the
@@ -515,8 +513,8 @@ object NearDupSignatureStore {
     val toks = layout.path(dir, "toksets")
     def toksFiles() = CellStore.partFiles(fs,
       new org.apache.hadoop.fs.Path(toksLive(spark, dir)))
-    val (sigsBefore, sigsAfter) = Compaction.compactPartitioned(spark,
-      layout.path(dir, "sigs"), "cell=", targetBytes)
+    val (sigsBefore, sigsAfter) =
+      layout.compact(spark, dir, "sigs", targetBytes)
     Compaction.recoverSwap(spark, toks)
     val toksBefore = toksFiles()
     val toksTmp = {

@@ -197,9 +197,16 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     rm(dir)
   }
 
-  test("a small append is hash-clustered on cell: exactly one new file " +
-      "per touched cell, fewer tasks than `cells`, probes unchanged") {
-    import spark.implicits._
+  /** Every file under the table's `cell=` dirs, by relative path. */
+  private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
+      table: String): Set[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(table))
+      .filter(_.getPath.getName.startsWith("cell="))
+      .flatMap(c => fs.listStatus(c.getPath)
+        .map(f => s"${c.getPath.getName}/${f.getPath.getName}")).toSet
+
+  test("a small append writes one cell-sorted L0 run: no cell dir " +
+      "changes, fewer tasks than `cells`, probes unchanged") {
     val c0 = fps(300, 83L, 0)
     val d1 = fps(12, 83L, 1000000)
     val dir = tmp("hamstore_append_tasks")
@@ -207,13 +214,7 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       bits = 64, cells = 64)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def filesPerCell(): Map[String, Int] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/bands"))
-        .filter(_.getPath.getName.startsWith("cell="))
-        .map(c => c.getPath.getName -> fs.listStatus(c.getPath)
-          .count(_.getPath.getName.startsWith("part-")))
-        .toMap.withDefaultValue(0)
-    val before = filesPerCell()
+    val before = cellFiles(fs, s"$dir/bands")
 
     val appendTasks = org.apache.spark.TaskCount.during(spark.sparkContext) {
       HammingStore.append(spark, dir, df(d1))
@@ -221,15 +222,13 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every job of the append together (meta read, emptiness check,
     // band write) stays below one task per cell
     assert(appendTasks < 64, s"append ran $appendTasks tasks for 64 cells")
-
-    val touched = spark.read.parquet(s"$dir/bands")
-      .filter($"id" >= 1000000L).select($"cell").distinct()
-      .collect().map(r => s"cell=${r.getInt(0)}").toSet
-    assert(touched.nonEmpty, "degenerate fixture")
-    val after = filesPerCell()
-    for (c <- before.keySet ++ after.keySet)
-      assert(after(c) - before(c) == (if (touched(c)) 1 else 0),
-        s"$c: ${before(c)} -> ${after(c)} files (touched=${touched(c)})")
+    assert(cellFiles(fs, s"$dir/bands") == before, "append touched a cell dir")
+    val st = HammingStore.stats(spark, dir)
+    assert(st.l0Files == 1 && st.bandRows == (300 + 12) * 5L, st.toString)
+    // the run is sorted on cell, so row-group stats can prune it
+    val cells = spark.read.parquet(s"$dir/bands/_l0").select("cell")
+      .collect().map(_.getInt(0)).toSeq
+    assert(cells.distinct.size > 1 && cells == cells.sorted, cells.toString)
 
     // the appended store probes exactly as newPairs on the grown corpus
     val d2 = fps(24, 83L, 2000000) ++
@@ -243,6 +242,50 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     rm(dir)
   }
 
+  test("probes read the L0 runs: matches that sit only in L0 equal " +
+      "newPairs after 1 and 3 appends, both scans pruned, and a re-build " +
+      "leaves no L0") {
+    val c0 = fps(90, 7L, 0)
+    val incs = (1 to 3).map(i => fps(15, 8L + i, 1000000L * i))
+    // planted copies of appended fingerprints: the family's clusters
+    // are ~32 bits from other seeds', so every match is an L0 row
+    val delta = df(incs.flatMap(_.take(4)).map { case (id, f) =>
+      (id + 500000, f) })
+    val dir = tmp("hamstore_l0")
+    HammingStore.build(df(c0), dir, "img_id", "fp", maxDist = 3, bits = 64,
+      cells = 8)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val built = cellFiles(fs, s"$dir/bands")
+    for (i <- 1 to 3) {
+      HammingStore.append(spark, dir, df(incs(i - 1)))
+      if (i != 2) {
+        val got = pairs(HammingStore.probe(spark, dir, delta))
+        val want = pairs(HammingJoin.newPairs(df(c0 ++ incs.take(i).flatten),
+          delta, "img_id", "fp", maxDist = 3, bits = 64))
+        assert(want.nonEmpty && want.forall(_._1 >= 1000000L),
+          s"$i: fixture must match L0 rows only: $want")
+        assert(got == want,
+          s"$i diff: ${(got -- want).take(5)} / ${(want -- got).take(5)}")
+      }
+    }
+    assert(cellFiles(fs, s"$dir/bands") == built)
+    assert(HammingStore.stats(spark, dir).l0Files == 3)
+    val plan = HammingStore.probeFrame(spark, dir, delta)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [cell"), plan.take(3000))
+    assert("PushedFilters: \\[[^\\]]*(In|EqualTo)\\(cell".r
+      .findFirstIn(plan).isDefined, plan.take(3000))
+    // a re-build overwrites the whole tree, L0 included
+    HammingStore.build(df(c0), dir, "img_id", "fp", maxDist = 3, bits = 64,
+      cells = 8)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bands/_l0")))
+    assert(pairs(HammingStore.probe(spark, dir, delta)) == pairs(HammingJoin
+      .newPairs(df(c0), delta, "img_id", "fp", maxDist = 3, bits = 64)),
+      "probe after re-build")
+    rm(dir)
+  }
+
   test("compact: probe identical before/after, maxFilesPerCell drops " +
       "to 1, banding meta untouched") {
     val dir = tmp("hamstore_compact")
@@ -251,7 +294,10 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (i <- 1 to 3)
       HammingStore.append(spark, dir, df(fps(15, 41L + i, 1000000L * i)))
     val before = HammingStore.stats(spark, dir)
-    assert(before.maxFilesPerCell >= 2, before.toString)
+    // one L0 run (one file at this size) per append; the stats count
+    // L0 rows: every band row of the inline corpus is there
+    assert(before.l0Files == 3, before.toString)
+    assert(before.bandRows == (90 + 3 * 15) * 5L, before.toString)
 
     val probeDelta = df(fps(20, 53L, 9000000L))
     val want = pairs(HammingStore.probe(spark, dir, probeDelta))
@@ -260,7 +306,7 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (filesBefore, filesAfter) = HammingStore.compact(spark, dir)
     assert(filesAfter < filesBefore, s"$filesBefore -> $filesAfter")
     val after = HammingStore.stats(spark, dir)
-    assert(after.maxFilesPerCell == 1, after.toString)
+    assert(after.maxFilesPerCell == 1 && after.l0Files == 0, after.toString)
     assert(after.bandRows == before.bandRows)
     assert((after.cells, after.bits, after.maxDist, after.numBands) ==
       (before.cells, before.bits, before.maxDist, before.numBands))
@@ -282,7 +328,8 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     HammingStore.append(spark, dir, d)
     HammingStore.append(spark, dir, d) // the at-least-once replay
     val bloated = HammingStore.stats(spark, dir)
-    val distinctRows = spark.read.parquet(s"$dir/bands").distinct().count()
+    val distinctRows = CellStore.table(spark,
+      HammingStore.bandsLive(spark, dir)).distinct().count()
     assert(bloated.bandRows > distinctRows, bloated.toString)
 
     val probeDelta = df(fps(20, 63L, 9000000L))
@@ -303,6 +350,81 @@ class HammingStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = HammingStore.probeFrame(spark, dir, probeDelta)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"), plan.take(2000))
+    rm(dir)
+  }
+
+  test("compact folds L0 into the cells, plain and dedupe, locally and " +
+      "under pointer swaps: rows kept (a set for dedupe), no L0 left, one " +
+      "file per cell, probe identical; a torn swap recovers to the old " +
+      "tree with its L0 intact") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[NoRenameFileSystem].getName)
+    conf.set("graft.swap.atomic-rename.norename", "false")
+    for ((scheme, root) <- Seq("local" -> "", "pointer" -> "norename://nn");
+        dedupe <- Seq(false, true)) {
+      val dir = s"$root${tmp(s"hamstore_fold_${scheme}_$dedupe")}/store"
+      HammingStore.build(df(fps(60, 61L, 0)), dir, "img_id", "fp",
+        maxDist = 3, bits = 64, cells = 8)
+      val d = df(fps(15, 62L, 1000000))
+      HammingStore.append(spark, dir, d)
+      HammingStore.append(spark, dir, d) // the at-least-once replay
+      val probeDelta = df(fps(20, 63L, 9000000L))
+      val want = pairs(HammingStore.probe(spark, dir, probeDelta))
+      assert(want.nonEmpty, "degenerate fixture")
+      val before = HammingStore.stats(spark, dir)
+      assert(before.l0Files == 2 && before.bandRows == (60 + 30) * 5L,
+        before.toString)
+      // die inside the swap: rename mode has set the live tree aside,
+      // pointer mode has not yet flipped the pointer
+      Compaction.pauseHook = Some(p =>
+        if (p == "swap-mid") throw new RuntimeException("crash@" + p))
+      try intercept[RuntimeException](
+        HammingStore.compact(spark, dir, dedupe = dedupe))
+      finally Compaction.pauseHook = None
+      Compaction.recoverSwap(spark, s"$dir/bands")
+      assert(HammingStore.stats(spark, dir) == before,
+        s"$scheme/$dedupe: recovery lost the old tree or its L0")
+      assert(pairs(HammingStore.probe(spark, dir, probeDelta)) == want)
+      val (filesBefore, filesAfter) =
+        HammingStore.compact(spark, dir, dedupe = dedupe)
+      val after = HammingStore.stats(spark, dir)
+      assert(filesAfter < filesBefore, s"$filesBefore -> $filesAfter")
+      assert(after.l0Files == 0 && after.maxFilesPerCell == 1,
+        s"$scheme/$dedupe: $after")
+      assert(after.bandRows == (if (dedupe) 75 else 90) * 5L,
+        s"$scheme/$dedupe: $after")
+      assert(pairs(HammingStore.probe(spark, dir, probeDelta)) == want,
+        s"$scheme/$dedupe: probe diverged after the L0 fold")
+      rm(new java.net.URI(dir).getPath.stripSuffix("/store"))
+    }
+  }
+
+  test("a store in the per-cell append layout (no L0) probes as " +
+      "newPairs and compacts per cell") {
+    val c0 = fps(90, 41L, 0)
+    val d1 = fps(15, 42L, 1000000L)
+    val dir = tmp("hamstore_percell")
+    HammingStore.build(df(c0), dir, "img_id", "fp", maxDist = 3, bits = 64,
+      cells = 8)
+    HammingStore.append(spark, dir, df(d1))
+    // what an append wrote before the L0 level: a file per touched cell
+    val live = HammingStore.bandsLive(spark, dir)
+    CellStore.writeClustered(spark.read.parquet(CellStore.l0(live)),
+      "append", live)
+    rm(CellStore.l0(live))
+    val before = HammingStore.stats(spark, dir)
+    assert(before.l0Files == 0 && before.maxFilesPerCell >= 2, before.toString)
+    val probeDelta = df(fps(20, 53L, 9000000L))
+    val want = pairs(HammingJoin.newPairs(df(c0 ++ d1), probeDelta,
+      "img_id", "fp", maxDist = 3, bits = 64))
+    assert(want.nonEmpty, "degenerate fixture")
+    assert(pairs(HammingStore.probe(spark, dir, probeDelta)) == want)
+    HammingStore.compact(spark, dir)
+    val after = HammingStore.stats(spark, dir)
+    assert(after.maxFilesPerCell == 1 && after.bandRows == before.bandRows,
+      after.toString)
+    assert(pairs(HammingStore.probe(spark, dir, probeDelta)) == want,
+      "probe diverged after the per-cell compact")
     rm(dir)
   }
 

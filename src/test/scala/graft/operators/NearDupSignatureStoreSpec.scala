@@ -235,22 +235,23 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("a small append is hash-clustered on cell: exactly one new file " +
-      "per touched cell, fewer tasks than `cells`, probes unchanged") {
-    import spark.implicits._
+  /** Every file under the table's `cell=` dirs, by relative path. */
+  private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
+      table: String): Set[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(table))
+      .filter(_.getPath.getName.startsWith("cell="))
+      .flatMap(c => fs.listStatus(c.getPath)
+        .map(f => s"${c.getPath.getName}/${f.getPath.getName}")).toSet
+
+  test("a small append writes one cell-sorted L0 run: no cell dir " +
+      "changes, fewer tasks than `cells`, probes unchanged") {
     val c0 = corpus(71, 200)
     val d1 = corpus(73, 12, from = 5000L)
     val dir = tmp("sigstore_append_tasks")
     NearDupSignatureStore.build(df(c0), dir, threshold = 0.5, cells = 64)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def filesPerCell(): Map[String, Int] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sigs"))
-        .filter(_.getPath.getName.startsWith("cell="))
-        .map(c => c.getPath.getName -> fs.listStatus(c.getPath)
-          .count(_.getPath.getName.startsWith("part-")))
-        .toMap.withDefaultValue(0)
-    val before = filesPerCell()
+    val before = cellFiles(fs, s"$dir/sigs")
 
     val appendTasks = org.apache.spark.TaskCount.during(spark.sparkContext) {
       NearDupSignatureStore.append(spark, dir, df(d1))
@@ -258,15 +259,13 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every job of the append together (meta read, vocabulary check,
     // signature and ledger writes) stays below one task per cell
     assert(appendTasks < 64, s"append ran $appendTasks tasks for 64 cells")
-
-    val touched = spark.read.parquet(s"$dir/sigs")
-      .filter($"doc_id" >= 5000L).select($"cell").distinct()
-      .collect().map(r => s"cell=${r.getInt(0)}").toSet
-    assert(touched.nonEmpty, "degenerate fixture")
-    val after = filesPerCell()
-    for (c <- before.keySet ++ after.keySet)
-      assert(after(c) - before(c) == (if (touched(c)) 1 else 0),
-        s"$c: ${before(c)} -> ${after(c)} files (touched=${touched(c)})")
+    assert(cellFiles(fs, s"$dir/sigs") == before, "append touched a cell dir")
+    val st = NearDupSignatureStore.stats(spark, dir)
+    assert(st.l0Files == 1, st.toString)
+    // the run is sorted on cell, so row-group stats can prune it
+    val cells = spark.read.parquet(s"$dir/sigs/_l0").select("cell")
+      .collect().map(_.getInt(0)).toSeq
+    assert(cells.distinct.size > 1 && cells == cells.sorted, cells.toString)
 
     // the appended store probes exactly as the inline operator does on
     // the grown corpus
@@ -278,6 +277,53 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want, s"diff: ${(got.keySet -- want.keySet).take(5)} / " +
       s"${(want.keySet -- got.keySet).take(5)}")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("probes read the L0 runs: matches that sit only in L0 equal the " +
+      "inline operator after 1 and 3 appends (both vocab regimes), both " +
+      "scans pruned, and a re-build leaves no L0") {
+    for ((vocabSize, name) <- Seq(40 -> "bitmask", 200 -> "generic")) {
+      // two-token build docs cover the whole vocabulary (so the bitmask
+      // regime holds) but match nothing at 0.5: every pair's store-side
+      // end is an appended doc, i.e. an L0 row
+      val c0 = (0 until vocabSize / 2).map(i =>
+        (i.toLong, Seq(s"t$i", s"t${i + vocabSize / 2}")))
+      val grown = corpus(43, 80, from = 1000L, vocabSize = vocabSize)
+      val delta = df(grown.drop(60))
+      val dir = tmp(s"sigstore_l0_$name")
+      NearDupSignatureStore.build(df(c0), dir, threshold = 0.5, cells = 8)
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val built = cellFiles(fs, s"$dir/sigs")
+      for (i <- 1 to 3) {
+        NearDupSignatureStore.append(spark, dir,
+          df(grown.slice(20 * (i - 1), 20 * i)))
+        if (i != 2) {
+          val got = pairs(NearDupSignatureStore.probe(spark, dir, delta))
+          val want = pairs(graft.queries.ApproxOps.minhashNearDupPairsDelta(
+            df(c0 ++ grown.take(20 * i)), delta, 0.5))
+          assert(want.nonEmpty && want.keys.forall(_._1 >= 1000L),
+            s"$name/$i: fixture must match L0 rows only: $want")
+          assert(got == want, s"$name/$i diff: " +
+            s"${(got.keySet -- want.keySet).take(5)} / " +
+            s"${(want.keySet -- got.keySet).take(5)}")
+        }
+      }
+      assert(cellFiles(fs, s"$dir/sigs") == built)
+      assert(NearDupSignatureStore.stats(spark, dir).l0Files == 3)
+      val plan = NearDupSignatureStore.probeFrame(spark, dir, delta)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [cell"), plan.take(3000))
+      assert("PushedFilters: \\[[^\\]]*(In|EqualTo)\\(cell".r
+        .findFirstIn(plan).isDefined, plan.take(3000))
+      // a re-build overwrites the whole tree, L0 included
+      NearDupSignatureStore.build(df(c0), dir, threshold = 0.5, cells = 8)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/sigs/_l0")))
+      assert(pairs(NearDupSignatureStore.probe(spark, dir, delta)) ==
+        pairs(graft.queries.ApproxOps.minhashNearDupPairsDelta(
+          df(c0), delta, 0.5)), s"$name: probe after re-build")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("generic-verify prune cap: above maxInFilterIds the toksets prune " +
@@ -311,11 +357,18 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         NearDupSignatureStore.append(spark, dir,
           df(corpus(41 + i, 15, from = 1000L * i, vocabSize = vocabSize)))
       val before = NearDupSignatureStore.stats(spark, dir)
-      // each append adds ≤1 file per touched cell + 1 ledger file — the
-      // growth compact exists to reverse
-      assert(before.maxFilesPerCell >= 2, before.toString)
+      // each append adds one L0 run (one file at this size) + 1 ledger
+      // file — the growth compact exists to reverse
+      assert(before.l0Files == 3, before.toString)
       // build + 3 appends, each ≥1 ledger file (≥1 per input partition)
       assert(before.toksetFiles >= 4, before.toString)
+      // the stats count L0 rows: every row of the inline corpus is there
+      val all = corpus(41, 60, vocabSize = vocabSize) ++ (1 to 3).flatMap(i =>
+        corpus(41 + i, 15, from = 1000L * i, vocabSize = vocabSize))
+      assert(before.toksetRows == all.size, before.toString)
+      assert(before.sigRows == graft.queries.ApproxOps.bandSignatures(df(all),
+        bandRows = graft.queries.ApproxOps.bandRowsFor(0.5)).count(),
+        before.toString)
 
       val probeDelta = df(corpus(53, 20, from = 9000L,
         vocabSize = vocabSize))
@@ -325,7 +378,7 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cs = NearDupSignatureStore.compact(spark, dir)
       assert(cs.sigFilesAfter < cs.sigFilesBefore, cs.toString)
       val after = NearDupSignatureStore.stats(spark, dir)
-      assert(after.maxFilesPerCell == 1, after.toString)
+      assert(after.maxFilesPerCell == 1 && after.l0Files == 0, after.toString)
       assert(after.toksetFiles == 1, after.toString)
       // contents untouched: same rows, same regime, same vocabulary
       assert(after.sigRows == before.sigRows)
@@ -366,6 +419,76 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cs.sigFilesAfter >= 1)
     assert(pairs(NearDupSignatureStore.probe(spark, dir, probeDelta))
       == want, "probe diverged after crash recovery + compact")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("compact folds L0 into the cells, locally and under pointer swaps: " +
+      "rows kept, no L0 left, one file per cell, probe identical; a torn " +
+      "swap recovers to the old tree with its L0 intact") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[NoRenameFileSystem].getName)
+    conf.set("graft.swap.atomic-rename.norename", "false")
+    for ((scheme, root) <- Seq("local" -> "", "pointer" -> "norename://nn")) {
+      val dir = s"$root${tmp(s"sigstore_fold_$scheme")}/store"
+      NearDupSignatureStore.build(df(corpus(59, 50)), dir, threshold = 0.5,
+        cells = 8)
+      for (i <- 1 to 2) NearDupSignatureStore.append(spark, dir,
+        df(corpus(60 + i, 15, from = 1000L * i)))
+      val probeDelta = df(corpus(67, 15, from = 9000L))
+      val want = pairs(NearDupSignatureStore.probe(spark, dir, probeDelta))
+      assert(want.nonEmpty, "degenerate fixture")
+      val before = NearDupSignatureStore.stats(spark, dir)
+      assert(before.l0Files == 2, before.toString)
+      // die inside the sigs swap: rename mode has set the live tree
+      // aside, pointer mode has not yet flipped the pointer
+      Compaction.pauseHook = Some(p =>
+        if (p == "swap-mid") throw new RuntimeException("crash@" + p))
+      try intercept[RuntimeException](NearDupSignatureStore.compact(spark, dir))
+      finally Compaction.pauseHook = None
+      Compaction.recoverSwap(spark, s"$dir/sigs")
+      assert(NearDupSignatureStore.stats(spark, dir) == before,
+        s"$scheme: recovery lost the old tree or its L0")
+      assert(pairs(NearDupSignatureStore.probe(spark, dir, probeDelta)) == want)
+      val cs = NearDupSignatureStore.compact(spark, dir)
+      val after = NearDupSignatureStore.stats(spark, dir)
+      assert(cs.sigFilesAfter < cs.sigFilesBefore, s"$scheme: $cs")
+      assert(after.l0Files == 0 && after.maxFilesPerCell == 1,
+        s"$scheme: $after")
+      assert(after.sigRows == before.sigRows &&
+        after.toksetRows == before.toksetRows, s"$scheme: $after")
+      assert(pairs(NearDupSignatureStore.probe(spark, dir, probeDelta))
+        == want, s"$scheme: probe diverged after the L0 fold")
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(new java.net.URI(dir).getPath).getParentFile)
+    }
+  }
+
+  test("a store in the per-cell append layout (no L0) probes as the " +
+      "inline operator and compacts per cell") {
+    val c0 = corpus(59, 50)
+    val d1 = corpus(61, 15, from = 1000L)
+    val dir = tmp("sigstore_percell")
+    NearDupSignatureStore.build(df(c0), dir, threshold = 0.5, cells = 8)
+    NearDupSignatureStore.append(spark, dir, df(d1))
+    // what an append wrote before the L0 level: a file per touched cell
+    val live = NearDupSignatureStore.sigsLive(spark, dir)
+    CellStore.writeClustered(spark.read.parquet(CellStore.l0(live)),
+      "append", live)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(CellStore.l0(live)))
+    val before = NearDupSignatureStore.stats(spark, dir)
+    assert(before.l0Files == 0 && before.maxFilesPerCell >= 2, before.toString)
+    val probeDelta = df(corpus(67, 15, from = 9000L))
+    val want = pairs(graft.queries.ApproxOps.minhashNearDupPairsDelta(
+      df(c0 ++ d1), probeDelta, 0.5))
+    assert(want.nonEmpty, "degenerate fixture")
+    assert(pairs(NearDupSignatureStore.probe(spark, dir, probeDelta)) == want)
+    NearDupSignatureStore.compact(spark, dir)
+    val after = NearDupSignatureStore.stats(spark, dir)
+    assert(after.maxFilesPerCell == 1 && after.sigRows == before.sigRows,
+      after.toString)
+    assert(pairs(NearDupSignatureStore.probe(spark, dir, probeDelta)) == want,
+      "probe diverged after the per-cell compact")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

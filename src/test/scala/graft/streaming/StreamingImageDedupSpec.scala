@@ -162,8 +162,8 @@ class StreamingImageDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // duplicate band set goes, every pair is still derivable
     val store = s"$workDir/hamstore"
     val bloated = graft.operators.HammingStore.stats(spark, store)
-    val distinctRows =
-      spark.read.parquet(s"$store/bands").distinct().count()
+    val distinctRows = graft.operators.CellStore.table(spark,
+      graft.operators.HammingStore.bandsLive(spark, store)).distinct().count()
     assert(bloated.bandRows > distinctRows,
       s"the post-store crash should have left duplicate band rows: " +
         s"${bloated.bandRows} vs $distinctRows")

@@ -291,7 +291,8 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
           .distinct().count()
         assert(stored == overflowed,
           s"store ledger $stored != distinct overflow $overflowed")
-        val sigs = spark.read.parquet(s"$work/sigstore/sigs").count()
+        val sigs = graft.operators.CellStore.table(spark, graft.operators
+          .NearDupSignatureStore.sigsLive(spark, s"$work/sigstore")).count()
         assert(sigs == 16L * stored,
           s"$sigs stored signature rows for $stored docs — recomputed?")
         assert(stored >= prevStored, "store shrank — rewrite, not append")
