@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
 
 import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.duration.Duration
@@ -28,11 +27,18 @@ import scala.reflect.runtime.universe.TypeTag
   *    ([[CellStore.scan]]) and the full-table read ([[CellStore.table]])
   *    union L0 in, and [[compact]] folds L0 into the cells.
   *
+  * Every table is a [[StateTables]] table: written zstd through
+  * [[StateTables.write]], read with its declared schema and a
+  * driver-side file listing, so no read here runs a Spark job (no
+  * footer inference, no parallel listing of many cell dirs).
+  *
   * [[exists]] is keyed on `meta` and [[build]] commits it LAST, so a
   * build that dies anywhere leaves `exists() == false` and the caller's
   * replay builds again (the overwrite replaces any partial table, L0
   * included). `kind` names the store in errors. */
 private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
+
+  private val metaTable = StateTables.storeMeta[M]
 
   def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -43,13 +49,33 @@ private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(metaPath(dir)))
 
+  private def metaWrite(spark: SparkSession, m: M) =
+    StateTables.write(metaTable,
+      spark.createDataset(Seq(m))(Encoders.product[M]).toDF().repartition(1))
+
   def writeMeta(spark: SparkSession, dir: String, m: M): Unit =
-    spark.createDataset(Seq(m))(Encoders.product[M]).toDF()
-      .repartition(1).write.mode("overwrite").parquet(metaPath(dir))
+    metaWrite(spark, m).mode("overwrite").parquet(metaPath(dir))
 
   def readMeta(spark: SparkSession, dir: String): M = {
     require(exists(spark, dir), s"no $kind at $dir (run build)")
-    spark.read.parquet(metaPath(dir)).as(Encoders.product[M]).collect().head
+    StateTables.readFlat(spark, metaTable, metaPath(dir))
+      .as(Encoders.product[M]).collect().head
+  }
+
+  /** Re-encode `meta` (whose row is `m`) in the state codec when any of
+    * its files is in another — a store built before the codec, at
+    * compaction. The new file lands beside the old before the old is
+    * deleted, so `meta` is never absent (an overwrite would make
+    * `exists` false mid-way); a crash between the two leaves two equal
+    * rows, which [[readMeta]] reads alike and the next call tidies. */
+  def recodeMeta(spark: SparkSession, dir: String, m: M): Unit = {
+    val fs = this.fs(spark, dir)
+    val old = fs.listStatus(new Path(metaPath(dir))).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    if (old.exists(!_.getName.endsWith(s".${StateTables.Codec}.parquet"))) {
+      metaWrite(spark, m).mode("append").parquet(metaPath(dir))
+      old.foreach(fs.delete(_, false))
+    }
   }
 
   /** Some(meta) when a store exists at `dir`, for callers that read it
@@ -133,8 +159,9 @@ private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
     * [[CellStore.writeClustered]] rewrite of cells ∪ L0 — ~one file per
     * cell, no L0 left — that keeps the row multiset, or with `dedupe`
     * reduces it to the set. The caller holds the store lease. */
-  def compact(spark: SparkSession, dir: String, table: String,
+  def compact(spark: SparkSession, dir: String, t: StateTables.Table,
       targetBytes: Long, dedupe: Boolean = false): (Int, Int) = {
+    val table = t.name
     val fs = this.fs(spark, dir)
     val p = path(dir, table)
     Compaction.recoverSwap(spark, p)
@@ -152,9 +179,9 @@ private[graft] final class CellStore[M <: Product : TypeTag](kind: String) {
         // `cell` comes back as the hive partition column and as an L0
         // data column; duplicates share a cell by construction, so a
         // `distinct` here has global set semantics
-        val rows = CellStore.table(spark, l)
+        val rows = CellStore.table(spark, l, t)
         CellStore.writeClustered(if (dedupe) rows.distinct() else rows,
-          "overwrite", tmp)
+          "overwrite", tmp, t)
         Compaction.swapDir(spark, p, tmp)
         (before, files(live(spark, dir, table)))
       }
@@ -175,9 +202,10 @@ private[graft] object CellStore {
     * AQE never coalesces a fixed-count shuffle, so a count would cost
     * that many tasks however small the write; without one AQE sizes the
     * task count from the bytes written. */
-  def writeClustered(rows: DataFrame, mode: String, path: String): Unit =
-    rows.repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(path)
+  def writeClustered(rows: DataFrame, mode: String, path: String,
+      t: StateTables.Table = undeclared): Unit =
+    StateTables.write(t, rows.repartition(col("cell")))
+      .mode(mode).partitionBy("cell").parquet(path)
 
   /** The L0 dir of the table whose live tree is `live`. */
   def l0(live: String): String = s"$live/_l0"
@@ -189,33 +217,44 @@ private[graft] object CellStore {
     * however many cells it touches. A cell-dir append would create one
     * file per touched cell (the 150-doc fold increment: 60 files plus
     * their checksums, ~85 % of the fold's state growth). */
-  def appendRun(rows: DataFrame, live: String): Unit =
-    rows.repartition(col("cell")).sortWithinPartitions("cell")
-      .write.mode("append").parquet(l0(live))
+  def appendRun(rows: DataFrame, live: String, t: StateTables.Table): Unit =
+    StateTables.write(t,
+      rows.repartition(col("cell")).sortWithinPartitions("cell"))
+      .mode("append").parquet(l0(live))
 
-  /** The L0 runs under `live` read with `schema` (the cell scan's — no
-    * inference job), or None when there are none. */
+  /** The L0 runs of `t` under `live`, or None when there are none: the
+    * run files go to the reader as one flat table (its declared schema,
+    * `cell` a data column), so no Spark job runs and Spark never sees
+    * the `_l0` dir as a root path (it would warn that it ignores a
+    * `_`-prefixed root on every read). */
   private def l0Read(spark: SparkSession, live: String,
-      schema: StructType): Option[DataFrame] = {
+      t: StateTables.Table): Option[DataFrame] = {
     val p = new Path(l0(live))
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       None
-    else Some(spark.read.schema(schema).parquet(p.toString))
+    else Some(StateTables.readFlat(spark, t, p.toString))
   }
 
-  /** The probe's read: the pruned `cell=` dirs ([[PrunedRead]]) unioned
-    * with the L0 runs, both filtered to `cells`. */
-  def scan(spark: SparkSession, live: String, cells: Seq[Int]): DataFrame = {
-    val pruned = PrunedRead.partitions(spark, live, "cell", cells)
-    l0Read(spark, live, pruned.schema).fold(pruned)(r => pruned.unionByName(
+  /** The probe's read: the pruned `cell=` dirs unioned with the L0 runs,
+    * both filtered to `cells` ([[StateTables.readCells]]: listed on the
+    * driver, no listing or inference job however many cells). */
+  def scan(spark: SparkSession, live: String, cells: Seq[Int],
+      t: StateTables.Table): DataFrame = {
+    val pruned = StateTables.readCells(spark, t, live, "cell", Some(cells))
+    l0Read(spark, live, t).fold(pruned)(r => pruned.unionByName(
       r.filter(if (cells.isEmpty) lit(false) else col("cell").isin(cells: _*))))
   }
 
-  /** The whole table under `live`: every cell ∪ every L0 run. */
-  def table(spark: SparkSession, live: String): DataFrame = {
-    val cells = spark.read.parquet(live)
-    l0Read(spark, live, cells.schema).fold(cells)(cells.unionByName(_))
+  /** The whole table `t` under `live`: every cell ∪ every L0 run. */
+  def table(spark: SparkSession, live: String,
+      t: StateTables.Table = undeclared): DataFrame = {
+    val cells = StateTables.readCells(spark, t, live, "cell")
+    l0Read(spark, live, t).fold(cells)(cells.unionByName(_))
   }
+
+  /** A cell table typed by its files' own footers (for reads and writes
+    * outside a store's declared tables). */
+  private def undeclared = StateTables.Table("cells", None)
 
   /** L0 run files under `live`: the table's compaction debt. */
   def l0Files(fs: FileSystem, live: String): Int =

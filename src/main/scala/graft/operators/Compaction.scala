@@ -21,6 +21,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Compact per leaf directory (one hive partition at a time) — merging
   * across partition boundaries would destroy partition pruning.
+  *
+  * Every rewrite is written in the state codec (zstd,
+  * [[StateTables.recode]]), whatever codec its input files carry, so
+  * compaction is also how an older state turns wholly zstd. Inputs are
+  * read job-free: the files are listed on the driver and typed by the
+  * newest one's footer ([[StateTables.readFlat]]), with no
+  * schema-inference job per read.
   */
 object Compaction {
   final case class Stats(inFiles: Int, inBytes: Long, outFiles: Int)
@@ -383,7 +390,8 @@ object Compaction {
     require(partPrefix.endsWith("="),
       s"partPrefix must be '<column>=' to rebuild the hive layout: $partPrefix")
     val colName = partPrefix.dropRight(1)
-    val leafSchema = spark.read.parquet(ls.head.toString).schema
+    val leafSchema = StateTables.readFlat(spark,
+      StateTables.Table(dir, None), ls.head.toString).schema
     val batches = ls.grouped(math.max(1, cellsPerJob)).toSeq.zipWithIndex
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(parallelism, batches.length)))
@@ -406,7 +414,8 @@ object Compaction {
               val value = org.apache.spark.sql.catalyst.catalog
                 .ExternalCatalogUtils
                 .unescapePathName(leaf.getName.stripPrefix(partPrefix))
-              spark.read.schema(leafSchema).parquet(leaf.toString)
+              StateTables.readFlat(spark,
+                  StateTables.Table(dir, Some(leafSchema)), leaf.toString)
                 .coalesce(n)
                 .withColumn(colName,
                   org.apache.spark.sql.functions.lit(value))
@@ -419,8 +428,8 @@ object Compaction {
             // batches' cell sets are disjoint, so the driver then just
             // renames the finished cell dirs up into the staging root.
             val bTmp = s"$tmp/__batch$bi"
-            branches.reduce(_ unionByName _)
-              .write.mode("overwrite").partitionBy(colName).parquet(bTmp)
+            StateTables.recode(branches.reduce(_ unionByName _))
+              .mode("overwrite").partitionBy(colName).parquet(bTmp)
             fs.listStatus(new Path(bTmp))
               .filter(st => st.isDirectory &&
                 st.getPath.getName.startsWith(partPrefix))
@@ -488,9 +497,10 @@ object Compaction {
         s"level, found none in $in (compact per leaf partition)")
     val totalBytes = parts.map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val merged = spark.read.parquet(in).coalesce(n)
-    sortCol.fold(merged)(c => merged.sortWithinPartitions(c))
-      .write.mode("overwrite").parquet(out)
+    val merged =
+      StateTables.readFlat(spark, StateTables.Table(in, None), in).coalesce(n)
+    StateTables.recode(sortCol.fold(merged)(c => merged.sortWithinPartitions(c)))
+      .mode("overwrite").parquet(out)
     val outPath = new Path(out)
     val outParts = outPath.getFileSystem(conf).listStatus(outPath)
       .count(f => f.isFile && f.getPath.getName.startsWith("part-"))

@@ -106,7 +106,7 @@ object HammingStore {
       val meta = HammingStoreMeta(bits, maxDist, b, cells, idCol, fpCol)
       layout.build(spark, dir, meta, "bands") {
         CellStore.writeClustered(bandsFor(dt, meta), "overwrite",
-          layout.path(dir, "bands"))
+          layout.path(dir, "bands"), StateTables.Bands)
       }
     }
   }
@@ -136,7 +136,7 @@ object HammingStore {
     // ⟺ empty bands, so the fused path answers emptiness from driver
     // metadata instead of one more limit-probe job (guide §2.6)
     if (!knownEmpty.getOrElse(bands.isEmpty))
-      CellStore.appendRun(bands, bandsLive(spark, dir))
+      CellStore.appendRun(bands, bandsLive(spark, dir), StateTables.Bands)
   }
 
   /** All pairs within Hamming distance ≤ the store's `maxDist` with at
@@ -214,7 +214,8 @@ object HammingStore {
     // discovery-pruned, r10 finding) and as a filter on the L0 runs
     val cellVals = bands.select($"cell").distinct().collect()
       .map(_.getInt(0)).toSeq
-    val store = CellStore.scan(spark, bandsLive(spark, dir), cellVals)
+    val store =
+      CellStore.scan(spark, bandsLive(spark, dir), cellVals, StateTables.Bands)
     // old–new: pruned store scan ⋈ BROADCAST delta bands — the store
     // side never shuffles (store ids are all pre-increment under the
     // unique-id contract, so orientation is normalized by
@@ -266,7 +267,8 @@ object HammingStore {
     val perCell = CellStore.filesPerCell(fs, live)
     StoreStats(m.cells, m.bits, m.max_dist, m.num_bands, perCell.sum,
       if (perCell.isEmpty) 0 else perCell.max,
-      CellStore.table(spark, live).count(), CellStore.l0Files(fs, live))
+      CellStore.table(spark, live, StateTables.Bands).count(),
+      CellStore.l0Files(fs, live))
   }
 
   /** Rewrite the band table's files without touching contents, through
@@ -277,9 +279,10 @@ object HammingStore {
     * and with it the probe's static pruning — is kept, the commit is
     * one [[Compaction.swapDir]] (rename-paired on HDFS/local,
     * pointer-swapped on object stores), probe output is identical
-    * before and after (asserted in the spec), and `meta` is never
-    * touched. Writers are lease-excluded. Returns (files before, files
-    * after), cells and L0 together.
+    * before and after (asserted in the spec), and `meta` keeps its row
+    * (re-encoded in the state codec if it is in another,
+    * [[CellStore.recodeMeta]]). Writers are lease-excluded. Returns
+    * (files before, files after), cells and L0 together.
     *
     * `dedupe = true` (round 16 — the E18 crash-bloat GC): the rewrite
     * additionally DISTINCTs the band rows. An at-least-once writer that
@@ -304,7 +307,8 @@ object HammingStore {
       targetBytes: Long = 128L * 1024 * 1024,
       dedupe: Boolean = false): (Int, Int) =
     MaintenanceLease.withLease(spark, dir, "compact") {
-      layout.readMeta(spark, dir) // store must exist; meta untouched
-      layout.compact(spark, dir, "bands", targetBytes, dedupe)
+      // the store must exist; meta keeps its row, re-encoded if needed
+      layout.recodeMeta(spark, dir, layout.readMeta(spark, dir))
+      layout.compact(spark, dir, StateTables.Bands, targetBytes, dedupe)
     }
 }

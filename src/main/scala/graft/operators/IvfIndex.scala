@@ -194,7 +194,7 @@ object IvfIndex {
     // static partition prune: the probed cell set is metadata-sized.
     // PrunedRead also skips DISCOVERY of the unprobed cell dirs — same
     // O(cells)-listings-per-query cost the signature-store probe shed
-    // (r10; measurement in PrunedRead's scaladoc)
+    // (r10; measurement in StateTables.readCells' scaladoc)
     val cells = probes.select($"cent_id").distinct().collect()
       .map(_.getLong(0)).toSeq
     val scored = broadcast(probes)

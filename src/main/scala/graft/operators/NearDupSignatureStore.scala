@@ -71,7 +71,8 @@ object NearDupSignatureStore {
 
   /** The ids already in the store: the `toksets` ledger's doc_id. */
   private[graft] def ledgerIds(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(toksLive(spark, dir)).select(col("doc_id"))
+    StateTables.readFlat(spark, StateTables.Toksets, toksLive(spark, dir))
+      .select(col("doc_id"))
 
   /** [[CellStore.preloadMeta]], for `preloadedMeta` below. */
   private[graft] def preloadMeta(spark: SparkSession,
@@ -144,10 +145,10 @@ object NearDupSignatureStore {
       // range and the "pruned" scan decodes the entire ledger (r10
       // ScaleBench finding at 2M docs). A per-partition local sort gives
       // each row group a narrow id quantile at zero shuffle cost.
-      dt.sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(layout.path(dir, "toksets"))
+      StateTables.write(StateTables.Toksets, dt.sortWithinPartitions("doc_id"))
+        .mode("overwrite").parquet(layout.path(dir, "toksets"))
       CellStore.writeClustered(sigsFor(dt, meta), "overwrite",
-        layout.path(dir, "sigs"))
+        layout.path(dir, "sigs"), StateTables.Sigs)
     }
     }
   }
@@ -192,10 +193,10 @@ object NearDupSignatureStore {
     if (m.mask_complete && deltaHasNullMask.getOrElse(
         sigs.filter($"mask".isNull).limit(1).count() > 0))
       layout.writeMeta(spark, dir, m.copy(mask_complete = false))
-    CellStore.appendRun(sigs, sigsLive(spark, dir))
+    CellStore.appendRun(sigs, sigsLive(spark, dir), StateTables.Sigs)
     // same row-group-stats discipline as build (see build's note)
-    dt.sortWithinPartitions("doc_id")
-      .write.mode("append").parquet(toksLive(spark, dir))
+    StateTables.write(StateTables.Toksets, dt.sortWithinPartitions("doc_id"))
+      .mode("append").parquet(toksLive(spark, dir))
   }
 
   /** The daily-increment loop fused: [[probe]] then [[append]] in one
@@ -352,7 +353,8 @@ object NearDupSignatureStore {
     // the touched cells' dirs (discovery-pruned: listing all `cells`
     // dirs was ~9 of an 8192-cell drip probe's 11.5 s, r10) ∪ the L0 runs
     val toksPath = toksLive(spark, dir)
-    val store = CellStore.scan(spark, sigsLive(spark, dir), cellVals)
+    val store =
+      CellStore.scan(spark, sigsLive(spark, dir), cellVals, StateTables.Sigs)
     // map-side mask verify only when the store's masks are complete AND
     // the delta stayed inside the frozen vocabulary. The null-mask
     // answer is computed ONCE (in the aggregate above) and threaded to
@@ -412,16 +414,17 @@ object NearDupSignatureStore {
         // result larger than the cap switches the prune strategy
         val idVals = oldNewP.select($"ra").distinct()
           .limit(maxInFilterIds + 1).collect().map(_.get(0)).toSeq
+        val toks = StateTables.readFlat(spark, StateTables.Toksets, toksPath)
         val storeToks =
           if (idVals.length <= maxInFilterIds)
-            spark.read.parquet(toksPath)
+            toks
               .filter(if (idVals.isEmpty) lit(false)
                 else inSetFilter($"doc_id", idVals))
               .select($"doc_id".as("ra"), ta)
           else
             // degenerate-dense fallback (see DefaultMaxInFilterIds):
             // left-semi shuffle prune — bounded memory over no-shuffle
-            spark.read.parquet(toksPath)
+            toks
               .select($"doc_id".as("ra"), ta)
               .join(oldNewP.select($"ra").distinct(), Seq("ra"), "left_semi")
         val oldNewV = oldNewP
@@ -475,9 +478,10 @@ object NearDupSignatureStore {
     val perCell = CellStore.filesPerCell(fs, sigsPath)
     StoreStats(m.cells, m.mask_complete, m.vocab.size,
       perCell.sum, if (perCell.isEmpty) 0 else perCell.max,
-      CellStore.table(spark, sigsPath).count(),
+      CellStore.table(spark, sigsPath, StateTables.Sigs).count(),
       CellStore.partFiles(fs, new org.apache.hadoop.fs.Path(toksPath)),
-      spark.read.parquet(toksPath).count(), CellStore.l0Files(fs, sigsPath))
+      StateTables.readFlat(spark, StateTables.Toksets, toksPath).count(),
+      CellStore.l0Files(fs, sigsPath))
   }
 
   final case class CompactStats(sigFilesBefore: Int, sigFilesAfter: Int,
@@ -496,8 +500,12 @@ object NearDupSignatureStore {
     *  - `toksets` (flat append ledger) compacts as one flat dir;
     *  - each table then SWAPS via rename — the probe output is
     *    byte-identical before and after (asserted in the spec), `meta`
-    *    is never touched, and a crash mid-swap is loud-and-recoverable
+    *    keeps its row, and a crash mid-swap is loud-and-recoverable
     *    (the next compact restores the set-aside original).
+    *
+    * Every rewritten file, `meta` included ([[CellStore.recodeMeta]]),
+    * is in the state codec ([[StateTables]]), so compacting a store
+    * written in another codec leaves it wholly zstd.
     *
     * Run it off the probe path on whatever cadence keeps
     * [[stats]]' `l0Files` small (weekly against daily appends,
@@ -508,13 +516,14 @@ object NearDupSignatureStore {
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactStats =
     MaintenanceLease.withLease(spark, dir, "compact") {
-    layout.readMeta(spark, dir) // store must exist; meta is untouched
+    // the store must exist; meta keeps its row, re-encoded if needed
+    layout.recodeMeta(spark, dir, layout.readMeta(spark, dir))
     val fs = layout.fs(spark, dir)
     val toks = layout.path(dir, "toksets")
     def toksFiles() = CellStore.partFiles(fs,
       new org.apache.hadoop.fs.Path(toksLive(spark, dir)))
     val (sigsBefore, sigsAfter) =
-      layout.compact(spark, dir, "sigs", targetBytes)
+      layout.compact(spark, dir, StateTables.Sigs, targetBytes)
     Compaction.recoverSwap(spark, toks)
     val toksBefore = toksFiles()
     val toksTmp = {

@@ -1,60 +1,24 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Partition-pruned read of a hive-partitioned parquet dir that also
-  * prunes the DRIVER-side partition DISCOVERY, not just the scan.
+  * prunes the DRIVER-side partition DISCOVERY, not just the scan, and
+  * runs no Spark job: [[StateTables.readCells]] over a table whose
+  * schema is the newest read file's footer (one driver-side footer
+  * read, no inference job).
   *
   * `spark.read.parquet(root).filter(col.isin(values))` prunes what is
   * READ, but partition discovery still LISTS every partition directory
-  * under `root` — driver-side metadata cost that on an object store is
-  * one LIST RPC per partition per call. Measured (r10 ScaleBench): a
-  * 20-doc signature-store probe against an 8192-cell store spent ~9 s
-  * of its 11.5 s wall clock listing 8160 `cell=` dirs it would never
-  * touch; with this read the same probe is 2.3 s. Executor record
-  * counts were identical before and after — `recordsRead` cannot see
-  * scan-planning cost, only wall clock at a high partition count does.
-  *
-  * Mechanics: ONE root listing, intersect with the wanted
-  * `part=value` names (a wanted value whose directory does not exist
-  * is simply absent — naming it as an explicit path would throw), read
-  * the surviving dirs as explicit paths under `basePath` so `partCol`
-  * remains a partition column. The `isin` filter is STILL applied: it
-  * is what plan-shape specs pin (`PartitionFilters`), and it keeps the
-  * read correct if a future layout splits a directory differently.
-  * With no surviving dirs the full-discovery read is kept as the
-  * schema source — the always-false (or nothing-matching) filter makes
-  * it a metadata-only plan.
-  *
-  * Only for partition values whose `toString` is the literal dir-name
-  * encoding (ints/longs — enforced with a loud `require`): a string
-  * value containing any character hive escapes (`%2F`-style) would
-  * MISS its directory silently and the rows would vanish from the
-  * read.
+  * under `root` — one LIST RPC per partition per call on an object
+  * store (measurement in [[StateTables.readCells]]). Only for integral
+  * partition values (enforced with a loud `require`): a string value
+  * containing any character hive escapes (`%2F`-style) would MISS its
+  * directory silently and the rows would vanish from the read.
   */
 object PrunedRead {
   def partitions(spark: SparkSession, root: String, partCol: String,
-      values: Seq[Any]): DataFrame = {
-    values.find {
-      case _: Int | _: Long | _: Short | _: Byte => false
-      case _ => true
-    }.foreach(v => throw new IllegalArgumentException(
-      s"PrunedRead.partitions only supports integral partition values " +
-        s"(got ${v.getClass.getName} '$v'): non-integral values need " +
-        "hive escaping in the directory name and would be missed " +
-        "silently"))
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val want = values.map(v => s"$partCol=$v").toSet
-    val dirs = fs.listStatus(rootP)
-      .filter(s => s.isDirectory && want.contains(s.getPath.getName))
-      .map(_.getPath.toString).toSeq
-    val base =
-      if (dirs.isEmpty) spark.read.parquet(root)
-      else spark.read.option("basePath", root).parquet(dirs: _*)
-    base.filter(
-      if (values.isEmpty) lit(false) else col(partCol).isin(values: _*))
-  }
+      values: Seq[Any]): DataFrame =
+    StateTables.readCells(spark, StateTables.Table(root, None), root,
+      partCol, Some(values))
 }

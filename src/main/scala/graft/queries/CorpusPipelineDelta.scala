@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.Multimodal
-import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, NearDupSignatureStore}
+import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, NearDupSignatureStore, StateTables}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -211,9 +211,9 @@ object CorpusPipelineDelta {
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** The 1-row meta state, read in ONE driver-side job (max id, last
-    * micro-batch tag, config fingerprint — each nullable, and the
-    * latter two columns absent entirely in states written by earlier
-    * rounds). */
+    * micro-batch tag, config fingerprint — each nullable). Columns a
+    * state written by an earlier round lacks read as NULL under the
+    * declared schema ([[StateTables.FoldMeta]]). */
   private final case class MetaState(maxId: Option[Long],
       lastBatch: Option[Long], cfgFp: Option[String],
       batchLo: Option[Long], batchHi: Option[Long], batchN: Option[Long],
@@ -226,14 +226,8 @@ object CorpusPipelineDelta {
     if (!Compaction.liveExists(fs, p))
       MetaState(None, None, None, None, None, None, None)
     else {
-      val df = s.read.parquet(Compaction.resolveLive(fs, p))
-      val cols = df.columns.toSet
-      def opt(name: String, tpe: String) =
-        if (cols(name)) col(name) else lit(null).cast(tpe).as(name)
-      val r = df.select(col("max_id"), opt("last_batch", "long"),
-        opt("cfg_fp", "string"), opt("batch_lo", "long"),
-        opt("batch_hi", "long"), opt("batch_n", "long"),
-        opt("media_max_id", "long")).collect().head
+      val r = StateTables.readFlat(s, StateTables.FoldMeta,
+        Compaction.resolveLive(fs, p)).collect().head
       def l(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
       MetaState(l(0), l(1),
         if (r.isNullAt(2)) None else Some(r.getString(2)), l(3), l(4), l(5),
@@ -456,7 +450,8 @@ object CorpusPipelineDelta {
     val hitsF =
       if (!Compaction.liveExists(fs, dPath)) None
       else Some(jobs("fold: ledger hit probe") {
-        s.read.parquet(Compaction.resolveLive(fs, dPath))
+        StateTables.readFlat(s, StateTables.Digests,
+            Compaction.resolveLive(fs, dPath))
           .join(broadcast(withDigest.select(col("__digest")).distinct()),
             "__digest")
           .select(col("__digest")).distinct()
@@ -600,8 +595,9 @@ object CorpusPipelineDelta {
     // the ledger after `exactNew` was cut, so it rides the pool from
     // the moment the journal exists
     jobs("fold: digest append") {
-      exactNew.select(col("__digest")).distinct()
-        .write.mode("append").parquet(Compaction.resolveLive(fs, dPath))
+      StateTables.write(StateTables.Digests,
+          exactNew.select(col("__digest")).distinct())
+        .mode("append").parquet(Compaction.resolveLive(fs, dPath))
     }
 
     // 3m. MEDIA half — LAUNCHED FIRST among the fold's side jobs
@@ -646,9 +642,9 @@ object CorpusPipelineDelta {
         // its own job at the fold's job-count floor
         if (mediaBounds.exists(!_.isNullAt(0)))
           inner("fold: media ledger") {
-            m.toDF().select(col("doc_id"))
-              .join(fps, Seq("doc_id"), "left")
-              .write.mode("append")
+            StateTables.write(StateTables.MediaSeen, m.toDF()
+                .select(col("doc_id")).join(fps, Seq("doc_id"), "left"))
+              .mode("append")
               .parquet(Compaction.resolveLive(fs, mediaSeenDir(stateDir)))
           }
         val mediaMeta0 = Await.result(mediaMetaF, Duration.Inf)
@@ -677,7 +673,7 @@ object CorpusPipelineDelta {
               HammingStore.probeThenAppendOverlapped(s, msd, fps, _,
                 preloadedMeta = mediaMeta0))
         if (!mPairs.isEmpty)
-          mPairs.write.mode("append")
+          StateTables.write(StateTables.MediaPairs, mPairs).mode("append")
             .parquet(Compaction.resolveLive(fs, mediaPairsDir(stateDir)))
       }
       maybeCrash(s, "post-media")
@@ -784,11 +780,12 @@ object CorpusPipelineDelta {
     jobs("fold: meta stage") {
       val metaNext = s"${metaDir(stateDir)}__next"
       fs.delete(new Path(metaNext), true)
-      Seq((newMax, batchTag.orElse(meta0.lastBatch), fp, bLo, bHi, bN,
-          newMediaMax))
-        .toDF("max_id", "last_batch", "cfg_fp", "batch_lo", "batch_hi",
-          "batch_n", "media_max_id")
-        .coalesce(1).write.mode("overwrite").parquet(metaNext)
+      StateTables.write(StateTables.FoldMeta,
+          Seq((newMax, batchTag.orElse(meta0.lastBatch), fp, bLo, bHi, bN,
+              newMediaMax))
+            .toDF("max_id", "last_batch", "cfg_fp", "batch_lo", "batch_hi",
+              "batch_n", "media_max_id").coalesce(1))
+        .mode("overwrite").parquet(metaNext)
     }
 
     // 7. mixture quotas: merge the delta's survivors into the persisted
@@ -808,11 +805,15 @@ object CorpusPipelineDelta {
     graft.Hygiene.scopedShuffleParts(s, mixBound) {
     val candCols =
       Seq(cfg.idCol, cfg.sourceCol, cfg.langCol, cfg.textCol).map(col)
+    val deltaCands = deconDelta.select(candCols: _*)
+    // the mix holds the delta's config-named columns, typed as the delta
+    // carries them: that is its declared schema
+    val mixTable = StateTables.mix(Some(deltaCands.schema))
     Compaction.recoverSwap(s, mPath) // pre-journal-era crash residue
     val cands =
-      if (!Compaction.liveExists(fs, mPath)) deconDelta.select(candCols: _*)
-      else s.read.parquet(Compaction.resolveLive(fs, mPath))
-        .unionByName(deconDelta.select(candCols: _*))
+      if (!Compaction.liveExists(fs, mPath)) deltaCands
+      else StateTables.readFlat(s, mixTable, Compaction.resolveLive(fs, mPath))
+        .unionByName(deltaCands)
     val mixed = LlmOps6.mixtureSample(cands, cfg.sourceCol, cfg.textCol,
       cfg.idCol, cfg.quotas).drop("rnk")
     // stage the new mix + meta as __next dirs — no swap yet (NEVER
@@ -820,7 +821,8 @@ object CorpusPipelineDelta {
     // after the commit marker below
     val next = s"${mPath}__next"
     fs.delete(new Path(next), true)
-    mixed.coalesce(1).write.mode("overwrite").parquet(next)
+    StateTables.write(mixTable, mixed.coalesce(1))
+      .mode("overwrite").parquet(next)
     } // scoped parts
     } // fold: mix stage
     } // pool scope: every pool-side job is durable from here on
@@ -862,7 +864,8 @@ object CorpusPipelineDelta {
       graft.Hygiene.scopedShuffleParts(s,
         cfg.quotas.values.map(_.toLong).sum) {
         graft.Hygiene.eagerCut(
-          CorpusPipeline.tailSplitPack(s.read.parquet(
+          CorpusPipeline.tailSplitPack(StateTables.readFlat(s,
+            StateTables.mix(None),
             Compaction.resolveLive(fsOf(s, stateDir), mixDir(stateDir))),
             cfg)) } }
 
@@ -875,7 +878,8 @@ object CorpusPipelineDelta {
     if (!Compaction.liveExists(fs, p)) {
       import s.implicits._
       Seq.empty[(Long, Long, Int)].toDF("doc_id_a", "doc_id_b", "hamming")
-    } else s.read.parquet(Compaction.resolveLive(fs, p))
+    } else StateTables.readFlat(s, StateTables.MediaPairs,
+      Compaction.resolveLive(fs, p))
   }
 
   /** The retained media ids after every fold so far: (doc_id, fp —
@@ -893,7 +897,8 @@ object CorpusPipelineDelta {
       Seq.empty[(Long, Option[Long])].toDF("doc_id", "fp")
     } else
       Dedup.greedyRetain(
-        s.read.parquet(Compaction.resolveLive(fs, seenP)),
+        StateTables.readFlat(s, StateTables.MediaSeen,
+          Compaction.resolveLive(fs, seenP)),
         mediaPairs(s, stateDir), "doc_id", "doc_id_b")
   }
 

@@ -34,6 +34,9 @@ object Sources {
   // ---- Q60: parquet round-trip with zstd compression ------------------
   // Codec choice changes bytes on disk, never values; at 100 TB zstd is
   // the default trade (≈parquet-snappy ratio × ~1.4 at similar speed).
+  // The engine's own state is written the same way: every fold and
+  // store table goes through `graft.operators.StateTables.write`, which
+  // passes this same per-write option.
   def q60(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = graft.RunTmp.dir("q60_zstd")

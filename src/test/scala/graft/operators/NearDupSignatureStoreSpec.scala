@@ -508,4 +508,47 @@ class NearDupSignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
+
+  test("reads of a store holding L0 runs log no \"All paths were " +
+      "ignored\" warning: probe, stats and compact hand Spark the run " +
+      "files, never the `_l0` dir") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = tmp("sigstore_l0warn")
+    NearDupSignatureStore.build(df(corpus(41, 60)), dir, threshold = 0.5,
+      cells = 8)
+    for (i <- 1 to 3)
+      NearDupSignatureStore.append(spark, dir,
+        df(corpus(41 + i, 15, from = 1000L * i)))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("l0-warn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val (l0Before, pairsFound) =
+      try {
+        val l0 = NearDupSignatureStore.stats(spark, dir).l0Files
+        val got = pairs(NearDupSignatureStore.probe(spark, dir,
+          df(corpus(53, 20, from = 9000L))))
+        NearDupSignatureStore.compact(spark, dir)
+        (l0, got)
+      } finally {
+        ctx.getConfiguration.getRootLogger.removeAppender(capture.getName)
+        ctx.updateLoggers()
+        capture.stop()
+      }
+    assert(l0Before == 3 && pairsFound.nonEmpty, "degenerate fixture")
+    assert(!seen.isEmpty, "the capture saw no log line at all")
+    val warned = seen.toArray.map(_.toString)
+      .filter(_.contains("All paths were ignored"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }

@@ -208,4 +208,162 @@ class CorpusPipelineMediaSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows(CorpusPipeline.assemble(corpus, cfg)),
       "mixed media/media-less chain diverged from the text batch twin")
   }
+
+  // ---- the state format (zstd at rest, declared-schema reads) ---------
+
+  private def bag(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).sorted.toSeq
+
+  /** Every parquet data file under `root`. */
+  private def dataFiles(root: String): Seq[org.apache.hadoop.fs.Path] = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
+    val out = Seq.newBuilder[org.apache.hadoop.fs.Path]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith("part-")) out += p
+    }
+    out.result()
+  }
+
+  /** Re-encode every data file under `root` in snappy, Spark's default
+    * codec (what the state's writers used before zstd), file for file:
+    * same rows, row groups and layout, renamed `*.snappy.parquet`. */
+  private def transcodeToSnappy(root: String): Unit = {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(root).foreach { in =>
+      val out = new org.apache.hadoop.fs.Path(in.getParent,
+        in.getName.replace(".zstd.parquet", ".snappy.parquet"))
+      val rw = new ParquetRewriter(new RewriteOptions.Builder(conf, in, out)
+        .transform(CompressionCodecName.SNAPPY).build())
+      try rw.processBlocks() finally rw.close()
+      in.getFileSystem(conf).delete(in, false)
+    }
+  }
+
+  test("declared state schemas read every fold and store table as " +
+      "inference does (a pre-journal meta too: lastBatchInfo all-None), " +
+      "and a retyped column fails the read naming its table") {
+    import spark.implicits._
+    import graft.operators.{CellStore, HammingStoreMeta, StateTables, StoreMeta}
+    val state = tmp("cpm_schemas")
+    val maxId = corpus.agg(max($"doc_id")).collect().head.getLong(0)
+    val half = maxId / 2
+    val ms = mediaBatches
+    CorpusPipelineDelta.foldIncrement(corpus.filter($"doc_id" <= half),
+      state, cfg, media = Some(mediaDs(ms(0))), mediaMaxDist = maxDist)
+    CorpusPipelineDelta.foldIncrement(corpus.filter($"doc_id" > half),
+      state, cfg, media = Some(mediaDs(ms(1))), mediaMaxDist = maxDist)
+    def same(declared: DataFrame, path: String): Unit = {
+      val inferred = spark.read.parquet(path)
+      assert(declared.columns.toSet == inferred.columns.toSet,
+        s"$path: ${declared.columns.mkString(",")}")
+      val got = bag(declared.select(inferred.columns.map(col): _*))
+      assert(got.nonEmpty && got == bag(inferred), path)
+    }
+    val flat = Seq(
+      StateTables.FoldMeta -> "meta", StateTables.mix(None) -> "mix",
+      StateTables.Digests -> "digests", StateTables.MediaSeen -> "media_seen",
+      StateTables.MediaPairs -> "media_pairs",
+      StateTables.storeMeta[StoreMeta] -> "store/meta",
+      StateTables.Toksets -> "store/toksets",
+      StateTables.storeMeta[HammingStoreMeta] -> "media_store/meta")
+    for ((t, rel) <- flat)
+      same(StateTables.readFlat(spark, t, s"$state/$rel"), s"$state/$rel")
+    // the mix under the schema the fold declares it with (the delta's)
+    val mixSchema = spark.read.parquet(s"$state/mix").schema
+    same(StateTables.readFlat(spark, StateTables.mix(Some(mixSchema)),
+      s"$state/mix"), s"$state/mix")
+    // cell tables: the `cell=` dirs and the second fold's L0 run
+    for ((t, rel) <- Seq(StateTables.Sigs -> "store/sigs",
+        StateTables.Bands -> "media_store/bands")) {
+      val live = s"$state/$rel"
+      same(StateTables.readCells(spark, t, live, "cell"), live)
+      val l0 = CellStore.l0(live)
+      assert(dataFiles(l0).nonEmpty, s"$live: the fixture wrote no L0 run")
+      same(StateTables.readFlat(spark, t, l0), l0)
+    }
+
+    // a pre-journal meta: max_id only
+    val legacy = tmp("cpm_legacy")
+    Seq(Option(41L)).toDF("max_id").coalesce(1).write.parquet(s"$legacy/meta")
+    assert(CorpusPipelineDelta.lastBatchInfo(spark, legacy) ==
+      CorpusPipelineDelta.LastBatchInfo(None, None, None, None))
+    val lm = StateTables.readFlat(spark, StateTables.FoldMeta, s"$legacy/meta")
+    assert(bag(lm.select("max_id")) ==
+      bag(spark.read.parquet(s"$legacy/meta")))
+    assert(lm.collect().head.toSeq.tail.forall(_ == null), bag(lm).toString)
+
+    // drift: a digest ledger file holding binary digests, a media ledger
+    // holding int ids
+    val drift = tmp("cpm_drift")
+    Seq("ab".getBytes("UTF-8")).toDF("__digest")
+      .write.parquet(s"$drift/digests")
+    val e1 = intercept[IllegalStateException](StateTables.readFlat(spark,
+      StateTables.Digests, s"$drift/digests"))
+    assert(e1.getMessage.contains("'digests'") &&
+      e1.getMessage.contains("binary"), e1.getMessage)
+    Seq((7, Option(3L))).toDF("doc_id", "fp").write.parquet(s"$drift/media_seen")
+    val e2 = intercept[IllegalStateException](
+      CorpusPipelineDelta.retainedMediaIds(spark, drift))
+    assert(e2.getMessage.contains("'media_seen'") &&
+      e2.getMessage.contains("doc_id"), e2.getMessage)
+  }
+
+  test("a state written in snappy keeps folding, recovers a pre-commit " +
+      "crash and compacts to all-zstd files; after every step the output " +
+      "equals both batch twins and the store probes like the inline " +
+      "operator") {
+    import spark.implicits._
+    import graft.operators.NearDupSignatureStore
+    val state = tmp("cpm_snappy")
+    val maxId = corpus.agg(max($"doc_id")).collect().head.getLong(0)
+    val (b1, b2) = (maxId / 3, 2 * maxId / 3)
+    val incs = Seq(
+      corpus.filter($"doc_id" <= b1),
+      corpus.filter($"doc_id" > b1 && $"doc_id" <= b2),
+      corpus.filter($"doc_id" > b2))
+    val ms = mediaBatches
+    def fold(i: Int): Unit = CorpusPipelineDelta.foldIncrement(incs(i),
+      state, cfg, media = Some(mediaDs(ms(i))), mediaMaxDist = maxDist)
+    def check(step: String, folded: Int): Unit = {
+      assert(rows(CorpusPipelineDelta.refreshOutput(spark, state, cfg)) ==
+        rows(CorpusPipeline.assemble(incs.take(folded).reduce(_ unionByName _),
+          cfg)), s"$step: text output diverged from the batch pipeline")
+      assert(retainedIds(state) == batchRetainedIds(ms.take(folded).flatten),
+        s"$step: media retention diverged from the batch facade")
+      // re-submitting stored docs under new ids must find them again
+      val sd = s"$state/store"
+      val ledger = spark.read.parquet(NearDupSignatureStore.toksLive(spark, sd))
+      val query = ledger.orderBy("doc_id").limit(15).collect()
+        .map(r => (r.getLong(0) + 1000000000L, r.getSeq[String](1))).toSeq
+        .toDF("doc_id", "toks")
+      def pairs(d: DataFrame) = d.collect().map(r =>
+        (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val got = pairs(NearDupSignatureStore.probe(spark, sd, query))
+      assert(got.nonEmpty && got == pairs(ApproxOps.minhashNearDupPairsDelta(
+        ledger, query, cfg.nearDupThreshold)), s"$step: probe diverged")
+    }
+    fold(0)
+    transcodeToSnappy(state)
+    assert(dataFiles(state).forall(_.getName.endsWith(".snappy.parquet")))
+    check("snappy state", 1)
+    fold(1)
+    check("fold over snappy", 2)
+    spark.conf.set(CorpusPipelineDelta.CrashPointConf, "pre-commit")
+    try intercept[CorpusPipelineDelta.InjectedCrash](fold(2))
+    finally spark.conf.unset(CorpusPipelineDelta.CrashPointConf)
+    assert(CorpusPipelineDelta.recoverFold(spark, state)
+      .isInstanceOf[CorpusPipelineDelta.RolledBack])
+    check("recovered", 2)
+    fold(2)
+    check("re-run fold", 3)
+    CorpusPipelineDelta.compactState(spark, state)
+    check("compacted", 3)
+    val left = dataFiles(state).filterNot(_.getName.endsWith(".zstd.parquet"))
+    assert(left.isEmpty, s"not zstd after compaction: ${left.take(5)}")
+  }
 }
